@@ -168,7 +168,7 @@ def main(argv: list[str] | None = None) -> int:
         # artifact built BEFORE the session so the executor env can be
         # declared at context creation: a driver-side os.environ set
         # after startup reaches executors only in local mode (by env
-        # inheritance); on a real cluster _resolve_tables would read an
+        # inheritance); on a real cluster resolve_models would read an
         # empty env var and silently train in-worker instead of
         # loading the shipped artifact.
         npz = os.path.join(tempfile.mkdtemp(prefix="curator_model_"),

@@ -40,16 +40,10 @@ class QualityConfig:
 
     # partitioning / layout
     n_buckets: int = 32
-    salt_partitions: int = 0  # 0 => let AQE decide
 
     # failure handling (analog of reference require_all_responses,
     # reference: request_processor/config.py:30)
     require_all_rows: bool = True
-
-    # code version folded into the fingerprint (per-release granularity;
-    # the reference hashes the dill-pickled closure instead,
-    # reference: llm/llm.py:147-172)
-    code_version: str = "curator_spark-0.1.0"
 
     def stable_json(self) -> str:
         return json.dumps(asdict(self), sort_keys=True, separators=(",", ":"))

@@ -1,6 +1,6 @@
 """PII/toxicity scrubbing core — compiled regexes + batch apply.
 
-Shared by the Spark pandas-UDF stage (stages/scrub.py) and the
+Shared by the Spark scoring UDF (stages/score.py) and the
 pure-pandas oracle (oracle/quality_oracle.py) so scrubbed text is
 byte-identical per url by construction (tests additionally compare
 against independently stored golden bytes, the reference's golden-hash

@@ -10,10 +10,10 @@ dense log-probability table and "scoring a batch" is pure numpy over the
 concatenated codepoint buffer of an Arrow batch — no per-row Python in
 the hot path.
 
-Both the Spark pandas UDFs (stages/langid.py, stages/perplexity.py) and
-the pure-pandas oracle (oracle/quality_oracle.py) call these functions,
-so float64 results are bit-identical between pipeline and oracle: same
-code, same summation order (np.cumsum is sequential).
+Both the Spark scoring UDF (stages/score.py) and the pure-pandas
+oracle (oracle/quality_oracle.py) call these functions, so float64
+results are bit-identical between pipeline and oracle: same code, same
+summation order (np.cumsum is sequential).
 """
 
 from __future__ import annotations
@@ -281,14 +281,3 @@ def perplexities(
     out = np.exp(-sums / np.maximum(counts, 1.0))
     out[counts < 1.0] = 1e9
     return out
-
-
-def score_batch(
-    texts: list[str], langs: tuple[str, ...],
-    table: np.ndarray | None = None, lm: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(lang_pred_idx, confidence, perplexity) with ONE encode pass."""
-    enc = encode_texts(texts)
-    pred, conf = langid_scores(texts, langs, table, encoded=enc)
-    ppl = perplexities(texts, lm, encoded=enc)
-    return pred, conf, ppl

@@ -47,25 +47,19 @@ def _default_stage_objs() -> list:
     """Everything whose source defines the pipeline's semantics: the
     FULL stage modules (not just their with_* entry functions — the
     semantic logic lives in same-module helpers like
-    extract._BODY_RE / langid.make_langid_udf / score.make_score_udf /
-    scrub.make_scrub_udf / decide._row_param, and hashing only the
-    thin wrappers would serve stale cached output after a helper edit
-    — ADVICE r2), plus the helper modules holding the code those
-    stages close over (model scoring cores, text statistics, scrub
-    regexes)."""
+    extract._BODY_RE / score.make_score_udf / decide._row_param, and
+    hashing only the thin wrappers would serve stale cached output
+    after a helper edit — ADVICE r2), plus the helper modules holding
+    the code those stages close over (model scoring cores, text
+    statistics, scrub regexes)."""
     from curator_spark.functions import scrub_core, textstats, vectorized
-    from curator_spark.stages import (
-        decide, extract, langid, perplexity, rules, score, scrub,
-    )
+    from curator_spark.stages import decide, extract, rules, score
 
     return [
         extract,
         rules,
         score,
-        langid,
-        perplexity,
         decide,
-        scrub,
         vectorized,
         textstats,
         scrub_core,

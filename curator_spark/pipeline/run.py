@@ -39,10 +39,8 @@ from curator_spark.pipeline.fingerprint import run_fingerprint
 from curator_spark.pipeline.catalog import CuratedTable, open_table
 from curator_spark.stages.decide import with_decision
 from curator_spark.stages.extract import extracted_text, with_extracted_text
-from curator_spark.stages.langid import with_langid
-from curator_spark.stages.perplexity import with_perplexity
 from curator_spark.stages.rules import with_rule_flags, with_rule_stats
-from curator_spark.stages.scrub import with_scrub
+from curator_spark.stages.score import with_scores
 
 OUT_COLS = [
     "url",
@@ -77,26 +75,16 @@ def quality_plan(
     df: DataFrame,
     cfg: QualityConfig,
     text_col: str = "text",
-    fused: bool = True,
 ) -> DataFrame:
     """The full logical plan over a pages-shaped DataFrame (no I/O).
 
-    fused=True scores langid+perplexity+scrub in ONE ArrowEvalPython
-    node (one text round-trip per batch — see stages/score.py);
-    fused=False chains the per-stage UDFs (3 round-trips, same values).
+    Scores langid + perplexity + scrub in ONE ArrowEvalPython node
+    (one text round-trip per batch, stages/score.py).
     """
     df = with_rule_stats(df, text_col)
     df = with_rule_flags(df, cfg)
-    if fused:
-        from curator_spark.stages.score import with_scores
-
-        df = with_scores(df, cfg, text_col)
-        df = with_decision(df, cfg)
-    else:
-        df = with_langid(df, cfg, text_col)
-        df = with_perplexity(df, text_col)
-        df = with_decision(df, cfg)
-        df = with_scrub(df, text_col)
+    df = with_scores(df, cfg, text_col)
+    df = with_decision(df, cfg)
     # dropped rows carry no scrubbed payload (they are not emitted downstream)
     df = df.withColumn(
         "scrubbed_text", F.when(F.col("keep"), F.col("scrubbed_text"))

@@ -18,9 +18,6 @@ Demotion rationale per extra query:
   ask #6) to make room for decontaminate_hashed — the 100 TB-shaped
   8-byte-broadcast-prefilter decontamination variant, byte-identical
   to decontaminate and now hash-gated by the driver itself.
-- langid_docs / perplexity_docs: per-doc model outputs, rows-only at
-  the driver; superseded in the measured set by `model_scores_pinned`
-  (hash-verified integer aggregates of the same two model stages).
 - lang_distribution: plain agg of the hash-verified langid_heuristic.
 - quality_score: composite of rule columns already verified by
   rule_stats + gopher_quality_docs + quality_keepdrop.
@@ -121,8 +118,6 @@ MEASURED = [
 EXTRA = [
     "quality_full_text",
     "error_props_histogram",
-    "langid_docs",
-    "perplexity_docs",
     "lang_distribution",
     "quality_score",
     "dedup_keep_list",

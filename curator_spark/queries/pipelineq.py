@@ -1,9 +1,10 @@
 """UDF-scored pipeline queries.
 
-langid / perplexity / quality_full run Arrow-vectorized model stages
-that have no faithful ANSI-SQL restatement — the driver records a
-weaker rows-only check for them; full value-level verification lives
-in tests/ against the shared-core Python oracle (FIXTURES.md pattern;
+The model-scored queries run the Arrow-vectorized scoring stage
+(stages/score.py), which has no faithful ANSI-SQL restatement: the
+driver hash-checks them against pinned golden values or records a
+weaker rows-only check; full value-level verification lives in tests/
+against the shared-core Python oracle (FIXTURES.md pattern;
 reference golden-hash tests tests/integrations/test_all.py:24-25,58-61).
 `dedup_simhash` IS fully SQL-expressible (md5 is shared by both
 engines) and carries a bit-exact DuckDB oracle below.
@@ -26,24 +27,7 @@ from pyspark.sql.functions import pandas_udf
 from curator_spark.config import DEFAULT_CONFIG as CFG
 from curator_spark.pipeline.run import quality_plan
 from curator_spark.queries.common import spread, t
-from curator_spark.stages.langid import with_langid
-from curator_spark.stages.perplexity import with_perplexity
-
-
-def q_langid_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    d = spread(d, spark)
-    d = with_langid(d, CFG, "text")
-    return d.select(
-        "doc_id", "lang_pred", F.round("lang_score", 6).alias("lang_score")
-    )
-
-
-def q_perplexity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    d = spread(d, spark)
-    d = with_perplexity(d, "text")
-    return d.select("doc_id", F.round("perplexity", 6).alias("perplexity"))
+from curator_spark.stages.score import with_scores
 
 
 def q_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,9 +41,9 @@ def q_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF runs ONCE and the data shuffles once (a separate
     groupBy-thresholds branch re-ran the whole Arrow scoring stage —
     Spark does not share subplans across join branches — measured 7.3s
-    vs 3.4s at sf0.1); langid + perplexity score in ONE fused Arrow
-    node (with_model_scores) so the text crosses the Python boundary
-    once, not twice. A mega-language single-tasks its window
+    vs 3.4s at sf0.1); langid + perplexity score in ONE Arrow node
+    (with_scores) so the text crosses the Python boundary once, not
+    twice. A mega-language single-tasks its window
     partition at corpus scale; CCNet's own answer applies there too:
     compute thresholds from a sample (or percentile_approx) and
     broadcast them, leaving the corpus stream shuffle-free.
@@ -68,10 +52,8 @@ def q_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     same linear-interpolation percentile formula)."""
     from pyspark.sql import Window
 
-    from curator_spark.stages.score import with_model_scores
-
     d = spread(t(spark, sf_dir, "documents"), spark)
-    d = with_model_scores(d, CFG, "text").select(
+    d = with_scores(d, CFG, "text", outputs=("langid", "perplexity")).select(
         "doc_id", "lang_pred", "perplexity"
     )
     by_lang = Window.partitionBy("lang_pred")
@@ -109,7 +91,7 @@ def q_model_scores_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_model_anchor.py, an independent per-row
     reimplementation that must match a sample of the pinned rows."""
     d = spread(t(spark, sf_dir, "documents"), spark)
-    d = with_langid(d, CFG, "text")
+    d = with_scores(d, CFG, "text", outputs=("langid",))
     return d.select(
         "doc_id",
         "lang_pred",
@@ -274,8 +256,6 @@ def q_quality_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES = {
-    "langid_docs": q_langid_docs,
-    "perplexity_docs": q_perplexity_docs,
     "model_scores_pinned": q_model_scores_pinned,
     "ccnet_ppl_buckets": q_ccnet_ppl_buckets,
     "quality_full_docs": q_quality_full_docs,
@@ -284,8 +264,8 @@ QUERIES = {
     "dedup_simhash": q_dedup_simhash,
 }
 
-# langid/perplexity/quality_full_text: rows-only by design (model UDFs
-# with float/free-text payloads).
+# quality_full_text: rows-only by design (model UDF with a free-text
+# payload).
 # model_scores_pinned / ccnet_ppl_buckets / quality_full_docs:
 # hash-verified against PINNED
 # golden VALUES oracles computed once from this repo's own model code

@@ -27,7 +27,7 @@ from curator_spark.config import DEFAULT_CONFIG as CFG
 from curator_spark.functions import textstats as ts
 from curator_spark.functions.scrub_core import SCRUB_RULES, TOXIC_WORDS
 from curator_spark.queries.common import spread, sql_stopword_list, sql_words, t
-from curator_spark.stages.scrub import with_scrub
+from curator_spark.stages.score import with_scores
 
 # BPE-ish token pattern: letter runs | digit runs | single other symbol.
 # explicit ASCII-ws class, NOT \s: this pattern string is shared
@@ -170,7 +170,7 @@ FROM st
 
 def q_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
-    d = with_scrub(d, "text")
+    d = with_scores(d, CFG, "text", outputs=("scrub",))
     return d.select(
         "doc_id",
         "scrubbed_text",
@@ -451,7 +451,7 @@ FROM wins
 # language's exclusive marker lexicon; argmax with deterministic
 # tie-break. Fully codegen/JVM-side, so it is the langid you run when
 # a 10^12-row pass can't afford even an Arrow round-trip; the UDF
-# stage (stages/langid.py) is the higher-recall scorer. Marker
+# stage (stages/score.py) is the higher-recall scorer. Marker
 # lexicons are derived from the same embedded corpora as the trigram
 # model, restricted to words unique to one language, so both engines
 # share one constant.

@@ -14,7 +14,7 @@ conversation, not the turn).
 State: `history: array<struct<role,content>>` + `done` + `turns` per
 row. Each round applies one Arrow-batched pandas UDF (the "model
 call" — here a deterministic responder callable, the same seam the
-rest of the repo uses for model stages, see stages/langid.py) to the
+rest of the repo uses for model stages, see stages/score.py) to the
 open rows only, appends the reply, and re-evaluates the stop
 condition. Lineage grows one projection per round, so the loop
 localCheckpoints every few rounds — same discipline as the

@@ -51,7 +51,7 @@ from curator_spark.functions import textstats as ts
 from curator_spark.queries.common import parquet_row_count
 from curator_spark.queries.textq import MARKERS
 from curator_spark.stages.rules import with_rule_flags, with_rule_stats
-from curator_spark.stages.score import with_model_scores
+from curator_spark.stages.score import with_scores
 
 # Native student features, in fixed order (training and the inlined
 # inference expression must agree on it).
@@ -97,6 +97,10 @@ def with_native_features(df: DataFrame, text_col: str = "text") -> DataFrame:
             F.when(wc > 0, hits / wc).otherwise(F.lit(0.0)),
         )
     return df
+
+
+# The score groups the teacher verdict reads (no scrub rewrite).
+TEACHER_OUTPUTS = ("langid", "perplexity")
 
 
 def teacher_model_ok(cfg: QualityConfig) -> Column:
@@ -199,9 +203,9 @@ def cascade_quality(
     train = feats.where(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(train_mod)) == 0
     )
-    labeled = with_model_scores(train, cfg, text_col=text_col).withColumn(
-        "model_ok", teacher_model_ok(cfg)
-    )
+    labeled = with_scores(
+        train, cfg, text_col, outputs=TEACHER_OUTPUTS
+    ).withColumn("model_ok", teacher_model_ok(cfg))
     intercept, weights = train_student(labeled, id_col=id_col)
 
     p = student_prob_expr(intercept, weights)
@@ -218,7 +222,7 @@ def cascade_quality(
         "_t_text",
         F.when(F.col("route") != "student", F.col(text_col)),
     )
-    scored = with_model_scores(scored, cfg, text_col="_t_text")
+    scored = with_scores(scored, cfg, "_t_text", outputs=TEACHER_OUTPUTS)
     model_ok = F.when(
         F.col("route") != "student", teacher_model_ok(cfg)
     ).otherwise(F.col("student_p") >= 0.5)

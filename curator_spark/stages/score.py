@@ -1,23 +1,31 @@
-"""Fused model-scoring stage: langid + perplexity + scrub in ONE
-Arrow round-trip.
+"""The model-scoring stage: langid, perplexity and PII/toxicity scrub
+in ONE Arrow round-trip per batch.
 
-Three chained pandas UDFs plan as three ArrowEvalPython nodes — three
-JVM->Python->JVM serializations of the text column per batch. Since
-all three scorers are pure functions of `text` sharing one worker-side
-model cache, fusing them into a single UDF cuts the IPC volume 3x;
-measured end-to-end docs/sec is the bench headline, so this is the hot
-path. The per-stage UDFs (stages/langid.py etc.) remain for modular
-use and A/B testing; both paths call the same compute cores
-(functions/vectorized.py, functions/scrub_core.py) so results are
-identical by construction.
+A UDF's cost is the Arrow transfer of its input column plus the
+interpreted compute, so every scored column comes out of one iterator
+pandas UDF: chaining one UDF per scorer would plan one ArrowEvalPython
+node each and ship the text JVM->Python->JVM once per node. Callers
+pick the column groups they need (`outputs`, a subset of `GROUPS`);
+the return schema follows that subset, the model groups share one
+codepoint-encode pass, and the scrub regexes run only when asked for.
+The compute cores are shared with the oracle (functions/vectorized.py,
+functions/scrub_core.py), so a column is bit-identical whichever
+subset produced it.
 
-Reference analog: the offline processor also scores everything a batch
-needs in one call (vllm_offline_request_processor.py:167-201).
+The model tables are built or loaded once per Python worker and reused
+across batches (`SPARK_LANGID_NPZ`, or the same file name under
+SparkFiles, switches to a shipped .npz artifact for spark-submit
+--files).
+
+Reference analog: the offline processor loads its model once per
+worker and scores everything a batch needs in one call
+(vllm_offline_request_processor.py:41-53,167-201).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import os
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -28,123 +36,124 @@ from pyspark.sql.functions import pandas_udf
 from curator_spark.config import QualityConfig
 from curator_spark.functions import vectorized as V
 from curator_spark.functions.scrub_core import scrub_series
-from curator_spark.stages.langid import _resolve_tables
 
-_RET = (
-    "lang_pred string, lang_score double, perplexity double, "
-    "scrubbed_text string, emails long, ids long, phones long, toxic long"
-)
+GROUPS = ("langid", "perplexity", "scrub")
+ALL = frozenset(GROUPS)
+_MODEL_GROUPS = frozenset({"langid", "perplexity"})
+_COUNTS = ("emails", "ids", "phones", "toxic")
+_SCHEMA = {
+    "langid": "lang_pred string, lang_score double",
+    "perplexity": "perplexity double",
+    "scrub": "scrubbed_text string, "
+    + ", ".join(f"{c} long" for c in _COUNTS),
+}
+
+# Shipped artifacts, loaded once per worker per path: every task
+# resolves the models, and a fresh table per task would pin a new
+# ~1 MB entry in the langid transpose cache (keyed on the table
+# object) for the life of a reused worker.
+_ARTIFACTS: dict[str, tuple[np.ndarray, np.ndarray, tuple[str, ...]]] = {}
 
 
-def make_score_udf(cfg: QualityConfig):
+def resolve_models(
+    langs: tuple[str, ...],
+) -> tuple[np.ndarray, tuple[str, ...], np.ndarray]:
+    """(langid table, its language order, bigram LM) for this worker."""
+    path = os.environ.get("SPARK_LANGID_NPZ", "")
+    if not path:
+        return V.get_langid_table(langs), langs, V.get_bigram_lm()
+    try:
+        from pyspark.files import SparkFiles
+
+        cand = SparkFiles.get(os.path.basename(path))
+        if os.path.exists(cand):
+            path = cand
+    except Exception:
+        pass  # no SparkContext in this process: use the path as given
+    if path not in _ARTIFACTS:
+        _ARTIFACTS[path] = V.load_artifacts(path)
+    table, lm, art_langs = _ARTIFACTS[path]
+    return table, art_langs, lm
+
+
+def _groups(outputs: Iterable[str]) -> frozenset[str]:
+    got = frozenset(outputs)
+    if not got or got - ALL:
+        raise ValueError(
+            f"outputs must be a non-empty subset of {GROUPS}: {sorted(got)}"
+        )
+    return got
+
+
+def make_score_udf(cfg: QualityConfig, outputs: Iterable[str] = ALL):
+    outputs = _groups(outputs)
     langs = cfg.langs
+    ret = ", ".join(_SCHEMA[g] for g in GROUPS if g in outputs)
 
-    @pandas_udf(_RET)
+    @pandas_udf(ret)
     def score_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        # models built/loaded once per worker, reused across batches
-        table, model_langs = _resolve_tables(langs)
-        lm = V.get_bigram_lm()
-        lang_arr = np.array(model_langs, dtype=object)
+        if outputs & _MODEL_GROUPS:
+            table, model_langs, lm = resolve_models(langs)
+            lang_arr = np.array(model_langs, dtype=object)
         for texts in it:
-            t = texts.fillna("").tolist()
-            pred_idx, conf, ppl = V.score_batch(t, model_langs, table, lm)
-            pred = np.where(
-                pred_idx >= 0, lang_arr[np.maximum(pred_idx, 0)], "und"
-            )
-            scrubbed, counts = scrub_series(texts)
-            # Arrow return-path compression: rows the scrub did not
-            # touch (all counts zero — replacements never reintroduce
-            # a pattern, so zero counts <=> byte-identical text) come
-            # back as NULL and are restored JVM-side by a coalesce
-            # with the original column. Web corpora are mostly
-            # PII-free, so this removes ~95% of the output text bytes
-            # from the Python->JVM serialization (the end-to-end
-            # pipeline's largest single cost after this change is the
-            # input text serialization, which is irreducible).
-            # NULL-text rows NULL-propagate scrubbed + counts (oracle
-            # regexp semantics; the JVM coalesce restores the NULL) —
-            # same rule as stages/scrub.py
+            out = {}
+            # NULL text: the models score it as "" (lang "und",
+            # perplexity 1e9); the scrub columns come back NULL, as
+            # regexp functions do in the oracle.
             nulls = texts.isna().values
-            unchanged = (counts.sum(axis=1).values == 0) & ~nulls
-            out = pd.DataFrame(
-                {
-                    "lang_pred": pred,
-                    "lang_score": conf,
-                    "perplexity": ppl,
-                    "scrubbed_text": scrubbed.mask(unchanged | nulls, None),
-                }
-            )
-            for c in ("emails", "ids", "phones", "toxic"):
-                out[c] = pd.array(
-                    np.where(nulls, None, counts[c].values), dtype="Int64"
-                )
-            yield out
+            if outputs & _MODEL_GROUPS:
+                t = texts.fillna("").tolist()
+                enc = V.encode_texts(t)
+                if "langid" in outputs:
+                    pred_idx, conf = V.langid_scores(
+                        t, model_langs, table, encoded=enc
+                    )
+                    out["lang_pred"] = np.where(
+                        pred_idx >= 0, lang_arr[np.maximum(pred_idx, 0)], "und"
+                    )
+                    out["lang_score"] = conf
+                if "perplexity" in outputs:
+                    out["perplexity"] = V.perplexities(t, lm, encoded=enc)
+            if "scrub" in outputs:
+                scrubbed, counts = scrub_series(texts)
+                # Arrow return-path compression: rows the scrub did not
+                # touch (all counts zero; replacements never reintroduce
+                # a pattern, so zero counts <=> byte-identical text)
+                # come back as NULL and with_scores restores them with a
+                # coalesce on the original column. Web text is mostly
+                # PII-free, so this removes most of the output text
+                # bytes from the Python->JVM transfer.
+                unchanged = (counts.sum(axis=1).values == 0) & ~nulls
+                out["scrubbed_text"] = scrubbed.mask(unchanged | nulls, None)
+                for c in _COUNTS:
+                    out[c] = pd.array(
+                        np.where(nulls, None, counts[c].values), dtype="Int64"
+                    )
+            yield pd.DataFrame(out)
 
     return score_udf
 
 
-def make_model_udf(cfg: QualityConfig):
-    """Fused langid + perplexity only (no scrub) — for consumers that
-    need both model scores but not the rewrite (e.g. CCNet buckets):
-    one Arrow round-trip of the text instead of two chained UDFs.
-    Same compute cores, so values are bit-identical to the per-stage
-    UDFs."""
-    langs = cfg.langs
-
-    @pandas_udf("lang_pred string, lang_score double, perplexity double")
-    def model_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        table, model_langs = _resolve_tables(langs)
-        lm = V.get_bigram_lm()
-        lang_arr = np.array(model_langs, dtype=object)
-        for texts in it:
-            t = texts.fillna("").tolist()
-            pred_idx, conf, ppl = V.score_batch(t, model_langs, table, lm)
-            pred = np.where(
-                pred_idx >= 0, lang_arr[np.maximum(pred_idx, 0)], "und"
-            )
-            yield pd.DataFrame(
-                {"lang_pred": pred, "lang_score": conf, "perplexity": ppl}
-            )
-
-    return model_udf
-
-
-def with_model_scores(
-    df: DataFrame, cfg: QualityConfig, text_col: str = "text"
+def with_scores(
+    df: DataFrame,
+    cfg: QualityConfig,
+    text_col: str = "text",
+    outputs: Iterable[str] = ALL,
 ) -> DataFrame:
-    """lang_pred / lang_score / perplexity from ONE fused Arrow pass."""
-    df = df.withColumn("_m", make_model_udf(cfg)(F.col(text_col)))
-    m = F.col("_m")
-    return (
-        df.withColumn("lang_pred", m["lang_pred"])
-        .withColumn("lang_score", m["lang_score"])
-        .withColumn("perplexity", m["perplexity"])
-        .drop("_m")
-    )
-
-
-def with_scores(df: DataFrame, cfg: QualityConfig, text_col: str = "text") -> DataFrame:
-    """All model-scored columns from one fused Arrow pass."""
-    df = df.withColumn("_score", make_score_udf(cfg)(F.col(text_col)))
+    """Add the columns of the requested groups from one Arrow pass:
+    langid -> lang_pred, lang_score; perplexity -> perplexity;
+    scrub -> scrubbed_text, scrub_counts."""
+    outputs = _groups(outputs)
+    df = df.withColumn("_score", make_score_udf(cfg, outputs)(F.col(text_col)))
     s = F.col("_score")
-    return (
-        df.withColumn("lang_pred", s["lang_pred"])
-        .withColumn("lang_score", s["lang_score"])
-        .withColumn("perplexity", s["perplexity"])
-        # NULL from the UDF means "scrub touched nothing" — restore
-        # the original bytes without ever shipping them back from
-        # Python (see the UDF body)
-        .withColumn(
-            "scrubbed_text", F.coalesce(s["scrubbed_text"], F.col(text_col))
-        )
-        .withColumn(
-            "scrub_counts",
-            F.struct(
-                s["emails"].alias("emails"),
-                s["ids"].alias("ids"),
-                s["phones"].alias("phones"),
-                s["toxic"].alias("toxic"),
-            ),
-        )
-        .drop("_score")
-    )
+    cols = {}
+    if "langid" in outputs:
+        cols["lang_pred"] = s["lang_pred"]
+        cols["lang_score"] = s["lang_score"]
+    if "perplexity" in outputs:
+        cols["perplexity"] = s["perplexity"]
+    if "scrub" in outputs:
+        # NULL from the UDF means "scrub touched nothing"
+        cols["scrubbed_text"] = F.coalesce(s["scrubbed_text"], F.col(text_col))
+        cols["scrub_counts"] = F.struct(*(s[c].alias(c) for c in _COUNTS))
+    return df.withColumns(cols).drop("_score")

@@ -15,7 +15,12 @@ N_SMALL = 1200
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("curator-spark-tests", cores=8, shuffle_partitions=16)
+    # one task slot per CPU the suite may use (the Tier-1 command
+    # exports SPARK_GRAFT_CPUS); more slots than CPUs only oversubscribe
+    cores = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+    s = get_spark("curator-spark-tests", cores=cores, shuffle_partitions=16)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -11,11 +11,12 @@ import pytest
 from curator_spark.config import QualityConfig
 from curator_spark.queries.common import t
 from curator_spark.stages.cascade import (
+    TEACHER_OUTPUTS,
     cascade_quality,
     teacher_model_ok,
     with_native_features,
 )
-from curator_spark.stages.score import with_model_scores
+from curator_spark.stages.score import with_scores
 
 SF_DIR = "/root/testdata/sf0.01"
 CFG = QualityConfig()
@@ -31,7 +32,7 @@ def docs(spark):
 @pytest.fixture(scope="module")
 def teacher(spark, docs):
     return (
-        with_model_scores(docs, CFG)
+        with_scores(docs, CFG, outputs=TEACHER_OUTPUTS)
         .withColumn("ok", teacher_model_ok(CFG))
         .select("doc_id", "ok")
     )
@@ -122,7 +123,7 @@ def test_train_student_partition_invariant(spark, docs):
     from curator_spark.stages.cascade import train_student
 
     feats = with_native_features(docs)
-    lab = with_model_scores(feats, CFG).withColumn(
+    lab = with_scores(feats, CFG, outputs=TEACHER_OUTPUTS).withColumn(
         "model_ok", teacher_model_ok(CFG)
     )
     assert train_student(lab.repartition(3)) == train_student(

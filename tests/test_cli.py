@@ -35,7 +35,7 @@ def test_print_submit_command(tmp_path, capsys):
     zip_path = cmd[cmd.index("--py-files") + 1]
     names = zipfile.ZipFile(zip_path).namelist()
     assert "curator_spark/pipeline/run.py" in names
-    assert "curator_spark/stages/langid.py" in names
+    assert "curator_spark/stages/score.py" in names
 
 
 def test_cli_run_and_resume(spark, pages_path, tmp_path, capsys):
@@ -124,22 +124,47 @@ def test_model_artifact_roundtrip(tmp_path):
 def test_shipped_npz_scores_identically(spark, pages_path, tmp_path):
     """SPARK_LANGID_NPZ path must produce the same scores as in-worker
     training (artifact = the same tables by construction)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
     from curator_spark.config import QualityConfig
-    from curator_spark.stages.langid import with_langid
+    from curator_spark.stages.score import with_scores
 
     cfg = QualityConfig()
+    cols = ["lang_pred", "lang_score", "perplexity"]
     df = spark.read.parquet(pages_path).limit(300).select("url", "text")
-    base = with_langid(df, cfg, "text").select("url", "lang_pred").toPandas()
+    base = with_scores(df, cfg, "text").select("url", *cols).toPandas()
 
     npz = str(tmp_path / "langid_lm.npz")
     V.save_artifacts(npz, cfg.langs)
     os.environ["SPARK_LANGID_NPZ"] = npz
     try:
-        shipped = with_langid(df, cfg, "text").select("url", "lang_pred").toPandas()
+        shipped = with_scores(df, cfg, "text").select("url", *cols).toPandas()
     finally:
         del os.environ["SPARK_LANGID_NPZ"]
     m = base.merge(shipped, on="url", suffixes=("_a", "_b"))
-    assert (m["lang_pred_a"] == m["lang_pred_b"]).all()
+    assert len(m) == len(base) == 300
+    for c in cols:
+        assert (m[f"{c}_a"] == m[f"{c}_b"]).all(), c
+
+
+def test_shipped_npz_loaded_once_per_worker(tmp_path, monkeypatch):
+    """Every task resolves the models; with a shipped artifact the
+    resolver must hand back the one copy it loaded. A reload per task
+    pinned a fresh ~1 MB langid transpose-cache entry per task for the
+    life of the (reused) Python worker."""
+    import numpy as np
+
+    from curator_spark.config import QualityConfig
+    from curator_spark.stages.score import resolve_models
+
+    langs = QualityConfig().langs
+    npz = str(tmp_path / "langid_lm.npz")
+    V.save_artifacts(npz, langs)
+    monkeypatch.setenv("SPARK_LANGID_NPZ", npz)
+    V._TABLE_T_CACHE.clear()
+    for _ in range(5):
+        table, model_langs, lm = resolve_models(langs)
+        V.langid_scores(["the cat sat on the mat"], model_langs, table)
+    assert len(V._TABLE_T_CACHE) == 1
+    assert model_langs == langs
+    # the artifact's LM is the one scored with, not a worker retrain
+    _, shipped_lm, _ = V.load_artifacts(npz)
+    np.testing.assert_array_equal(lm, shipped_lm)

@@ -187,7 +187,9 @@ def test_naive_matches_vectorized_core(sample_docs, naive_results):
     from curator_spark.functions import vectorized as V
 
     texts = [t for _, t in sample_docs]
-    pred, conf, ppl = V.score_batch(texts, LANGS)
+    enc = V.encode_texts(texts)
+    pred, conf = V.langid_scores(texts, LANGS, encoded=enc)
+    ppl = V.perplexities(texts, encoded=enc)
     for j, (doc_id, _) in enumerate(sample_docs):
         n_pred, n_conf, n_ppl = naive_results[doc_id]
         assert pred[j] == n_pred, doc_id

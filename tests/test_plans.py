@@ -69,15 +69,25 @@ def test_native_rule_stage_is_codegen_no_python(spark, pages, cfg):
 
 
 def test_udf_stages_are_arrow_batched(spark, pages, cfg):
-    """Model stages must use ArrowEvalPython (vectorized), never
+    """Model scoring must use ArrowEvalPython (vectorized), never
     row-at-a-time BatchEvalPython."""
-    from curator_spark.stages.langid import with_langid
-    from curator_spark.stages.perplexity import with_perplexity
+    from curator_spark.stages.score import with_scores
 
-    df = with_perplexity(with_langid(pages, cfg, "text"), "text")
-    plan = _executed(df.select("url", "lang_pred", "perplexity"))
+    df = with_scores(pages, cfg, "text")
+    plan = _executed(df.select("url", "lang_pred", "perplexity", "scrubbed_text"))
     assert "ArrowEvalPython" in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_quality_plan_scores_in_one_arrow_node(spark, pages, cfg):
+    """langid, perplexity and scrub share ONE Arrow round-trip of the
+    text per batch — one ArrowEvalPython node in the whole plan."""
+    from curator_spark.pipeline.run import OUT_COLS, quality_plan, with_bucket
+
+    df = with_bucket(pages, cfg.n_buckets)
+    plan = _executed(quality_plan(df, cfg, "text").select(*OUT_COLS))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "BatchEvalPython" not in plan, plan
 
 
 def test_small_dim_join_broadcasts(spark, sf_dir="/root/testdata/sf0.001"):

@@ -17,11 +17,10 @@ from hypothesis import strategies as st
 from curator_spark.config import QualityConfig
 from curator_spark.functions import vectorized as V
 from curator_spark.functions.scrub_core import scrub_series
-from curator_spark.stages.langid import _resolve_tables
+from curator_spark.stages.score import resolve_models
 
 CFG = QualityConfig()
-TABLE, LANGS = _resolve_tables(CFG.langs)
-LM = V.get_bigram_lm()
+TABLE, LANGS, LM = resolve_models(CFG.langs)
 
 texts_strategy = st.lists(
     st.text(max_size=200), min_size=1, max_size=12
@@ -30,13 +29,20 @@ texts_strategy = st.lists(
 
 @settings(max_examples=150, deadline=None)
 @given(texts=texts_strategy, split=st.integers(min_value=0, max_value=12))
-def test_score_batch_composition_independent(texts, split):
-    """score_batch(A + B) must equal score_batch(A) ++ score_batch(B)
-    bit-for-bit — no cross-row leakage through batch composition."""
+def test_model_scores_composition_independent(texts, split):
+    """The model scores of A + B must equal those of A ++ those of B
+    bit-for-bit — no cross-row leakage through batch composition.
+    Scored as the UDF scores a batch: one shared encode pass."""
     split = min(split, len(texts))
-    p_all, c_all, ppl_all = V.score_batch(texts, LANGS, TABLE, LM)
-    pa, ca, ppla = V.score_batch(texts[:split], LANGS, TABLE, LM)
-    pb, cb, pplb = V.score_batch(texts[split:], LANGS, TABLE, LM)
+
+    def scores(batch):
+        enc = V.encode_texts(batch)
+        pred, conf = V.langid_scores(batch, LANGS, TABLE, encoded=enc)
+        return pred, conf, V.perplexities(batch, LM, encoded=enc)
+
+    p_all, c_all, ppl_all = scores(texts)
+    pa, ca, ppla = scores(texts[:split])
+    pb, cb, pplb = scores(texts[split:])
     assert (p_all == np.concatenate([pa, pb])).all()
     assert (c_all == np.concatenate([ca, cb])).all()
     assert (ppl_all == np.concatenate([ppla, pplb])).all()
