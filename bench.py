@@ -186,8 +186,8 @@ def run_suite(
     # EXTRA registry rows: best-of-2, same warm session — recorded in
     # BENCH/last_run_full.json ONLY (the stdout JSON line is budgeted
     # to the driver's 2000-char tail and carries exactly the 50
-    # measured rows), so the EXTRA variants (21 as of late r5) still
-    # get round-over-round perf tracking without risking the gate
+    # measured rows), so the EXTRA queries (9) still get
+    # round-over-round perf tracking without risking the gate
     # line. Disable with SPARK_GRAFT_BENCH_EXTRA=0.
     extra: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_BENCH_EXTRA", "1") != "0":

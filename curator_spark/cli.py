@@ -42,9 +42,10 @@ def build_parser() -> argparse.ArgumentParser:
                         "meta)")
     p.add_argument("--incremental-state", action="store_true",
                    help="with --input-format table: print the slice "
-                        "lineage for this input table (one JSON object "
-                        "per slice: since/to/fingerprint/buckets_done/"
-                        "n_buckets/docs_seen/complete) and exit without "
+                        "lineage for this input table (one JSON array on "
+                        "one line, one object per slice: since/to/"
+                        "fingerprint/buckets_done/n_buckets/docs_seen/"
+                        "complete) and exit without "
                         "running — metadata-only, no data read")
     p.add_argument("--out", required=True, help="output snapshot-table root")
     p.add_argument("--cores", type=int,

@@ -603,45 +603,46 @@ class QualityPipeline:
         # is simply empty and the zero-row bucket bookkeeping below
         # still commits the buckets as done.
         written = spark.read.schema(out.schema).parquet(stage_dir)
-        per_bucket = (
-            written.groupBy("bucket_id")
+        # ONE aggregate job: keep is exactly `drop_reason IS NULL`
+        # (with_decision derives it so, and staged_plan names a reason
+        # for every row it forces to keep=false), so the NULL-reason
+        # group of a bucket holds its kept rows and the others its
+        # per-rule drops; the per-bucket fold runs on the driver.
+        scrub_keys = ("emails", "ids", "phones", "toxic")
+        groups = (
+            written.groupBy("bucket_id", "drop_reason")
             .agg(
-                F.count("*").alias("docs_seen"),
-                F.sum(F.col("keep").cast("long")).alias("docs_kept"),
-                F.sum("scrub_counts.emails").alias("emails"),
-                F.sum("scrub_counts.ids").alias("ids"),
-                F.sum("scrub_counts.phones").alias("phones"),
-                F.sum("scrub_counts.toxic").alias("toxic"),
+                F.count("*").alias("n"),
+                *(F.sum(f"scrub_counts.{k}").alias(k) for k in scrub_keys),
             )
             .collect()
         )
-        per_reason = (
-            written.filter(~F.col("keep"))
-            .groupBy("bucket_id", "drop_reason")
-            .count()
-            .collect()
-        )
-        reason_map: dict[int, dict[str, int]] = {}
-        for r in per_reason:
-            reason_map.setdefault(r["bucket_id"], {})[r["drop_reason"]] = r["count"]
-        buckets_meta = {
-            str(r["bucket_id"]): {
-                "docs_seen": r["docs_seen"],
-                "docs_kept": r["docs_kept"],
-                "dropped_by_rule": reason_map.get(r["bucket_id"], {}),
-                "scrub_counts": {
-                    "emails": r["emails"], "ids": r["ids"],
-                    "phones": r["phones"], "toxic": r["toxic"],
-                },
-            }
-            for r in per_bucket
-        }
+        buckets_meta: dict[str, dict] = {}
+        for r in sorted(
+            groups, key=lambda r: (r["bucket_id"], r["drop_reason"] or "")
+        ):
+            b = buckets_meta.setdefault(
+                str(r["bucket_id"]),
+                {"docs_seen": 0, "docs_kept": 0, "dropped_by_rule": {},
+                 "scrub_counts": dict.fromkeys(scrub_keys)},
+            )
+            b["docs_seen"] += r["n"]
+            if r["drop_reason"] is None:
+                b["docs_kept"] += r["n"]
+            else:
+                b["dropped_by_rule"][r["drop_reason"]] = r["n"]
+            # SQL sum semantics across the groups: NULL only when every
+            # row of the bucket has NULL counts (e.g. all dup_of_history)
+            sc = b["scrub_counts"]
+            for k in scrub_keys:
+                if r[k] is not None:
+                    sc[k] = (sc[k] or 0) + r[k]
         # buckets that had zero valid rows still count as committed
         for b in todo:
             buckets_meta.setdefault(
                 str(b),
                 {"docs_seen": 0, "docs_kept": 0, "dropped_by_rule": {},
-                 "scrub_counts": {"emails": 0, "ids": 0, "phones": 0, "toxic": 0}},
+                 "scrub_counts": dict.fromkeys(scrub_keys, 0)},
             )
 
         meta = {

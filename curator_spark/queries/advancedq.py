@@ -1,20 +1,18 @@
-"""Advanced relational coverage: skew-aware salted aggregation, as-of
-join, hierarchical rollup, exact percentiles.
+"""Advanced relational coverage: as-of join, grouping sets, JSON
+repair, seeded distractor sampling, sketch profiling.
 
-- `domain_doc_stats`: the north_rule's "salted repartitioning for
-  skewed domains" as a two-stage aggregation — partial agg on
-  (domain, salt) then final agg on domain. With ~1% of domains owning
-  ~50% of rows (synth skew profile), a naive groupBy(domain) sends a
-  mega-domain's every row to one reducer; salting bounds any single
-  task at 1/SALTS of the hot key. Results are identical to the naive
-  plan (same oracle SQL proves it).
 - `asof_last_click_before_error`: as-of join (reference has no joins
   at all, SURVEY §2.3; DuckDB has native ASOF JOIN) composed from
   Spark primitives: union-tag + partitioned window last() — one
   shuffle on user_id, no range explosion.
-- `revenue_rollup`: ROLLUP hierarchical aggregate.
-- `value_percentiles`: exact percentiles via percentile() (DuckDB
-  quantile_cont twin).
+- `events_type_hour_cube`: CUBE grouping sets. It is the registry's
+  one grouping-sets query; CUBE subsumes the ROLLUP hierarchy.
+- `json_repair_stats`: truncated-JSON repair + JSON unpack + per-type
+  histogram.
+- `distractor_sample`: the RAFT distractor join over an md5-bucketed
+  candidate pool.
+- `corpus_profile_sketch`: HLL / GK-sketch per-source profile (no
+  DuckDB oracle; bounded against exact pandas values in its test).
 """
 
 from __future__ import annotations
@@ -24,37 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from curator_spark.queries.common import t
-
-SALTS = 8
-
-
-# ---------------------------------------------------------------------------
-# domain_doc_stats — salted two-stage agg over the skewed source column.
-# (documents.source plays the domain role: 20 sources at sf0.01.)
-# ---------------------------------------------------------------------------
-
-def q_domain_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    salted = d.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(SALTS)))
-    partial = salted.groupBy("source", "salt").agg(
-        F.count("*").alias("pn"),
-        F.sum("n_chars").alias("pchars"),
-        F.min("doc_id").alias("pmin"),
-    )
-    return partial.groupBy("source").agg(
-        F.sum("pn").alias("n_docs"),
-        F.sum("pchars").alias("sum_chars"),
-        F.min("pmin").alias("first_doc_id"),
-    )
-
-
-SQL_DOMAIN_DOC_STATS = """
-SELECT source,
-       count(*)::BIGINT AS n_docs,
-       sum(n_chars)::BIGINT AS sum_chars,
-       min(doc_id)::BIGINT AS first_doc_id
-FROM documents GROUP BY source
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -103,102 +70,9 @@ ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
 
 
 # ---------------------------------------------------------------------------
-# revenue_rollup — ROLLUP(returnflag, linestatus) hierarchy.
-# ---------------------------------------------------------------------------
-
-def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").alias("n_lines"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))),
-                2,
-            ).alias("revenue"),
-        )
-    )
-
-
-SQL_REVENUE_ROLLUP = """
-SELECT l_returnflag, l_linestatus,
-       count(*)::BIGINT AS n_lines,
-       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
-FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
-# ---------------------------------------------------------------------------
-# value_percentiles — exact quantiles per event_type.
-# ---------------------------------------------------------------------------
-
-def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.round(F.percentile("value", F.lit(0.5)), 4).alias("p50"),
-        F.round(F.percentile("value", F.lit(0.9)), 4).alias("p90"),
-        F.round(F.percentile("value", F.lit(0.99)), 4).alias("p99"),
-    )
-
-
-SQL_VALUE_PERCENTILES = """
-SELECT event_type,
-       round(quantile_cont(value, 0.5), 4) AS p50,
-       round(quantile_cont(value, 0.9), 4) AS p90,
-       round(quantile_cont(value, 0.99), 4) AS p99
-FROM events GROUP BY event_type
-"""
-
-
-# ---------------------------------------------------------------------------
-# clicks_before_error — range join: for each error event, how many
-# clicks the same user made in the preceding 5 minutes. Spark plans
-# equi-key (user_id) + range predicate as a hash join with a residual
-# range filter — per-user event counts are bounded, so no range
-# explosion; the pure-range-join case (no equi key) is the one that
-# needs binning at scale.
-# ---------------------------------------------------------------------------
-
-RANGE_SECONDS = 300
-
-
-def q_clicks_before_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    errors = ev.where(F.col("event_type") == "error").select(
-        "user_id", F.col("event_id").alias("error_id"), F.col("ts").alias("ets")
-    )
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"), F.col("ts").alias("cts")
-    )
-    joined = errors.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("cts") >= F.col("ets") - F.expr(f"INTERVAL {RANGE_SECONDS} SECOND"))
-        & (F.col("cts") < F.col("ets")),
-        "left",
-    )
-    return joined.groupBy("user_id", "error_id").agg(
-        F.count("cts").alias("n_recent_clicks")
-    )
-
-
-SQL_CLICKS_BEFORE_ERROR = f"""
-SELECT e.user_id, e.event_id AS error_id,
-       count(c.ts)::BIGINT AS n_recent_clicks
-FROM (SELECT * FROM events WHERE event_type = 'error') e
-LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-  ON e.user_id = c.user_id
- AND c.ts >= e.ts - INTERVAL {RANGE_SECONDS} SECOND
- AND c.ts < e.ts
-GROUP BY e.user_id, e.event_id
-"""
-
-
-# ---------------------------------------------------------------------------
 # events_type_hour_cube — CUBE(event_type, hour-of-day): all four
-# grouping combinations in one pass (grouping-sets coverage; rollup
-# covers the hierarchical case).
+# grouping combinations in one pass (grouping-sets coverage; CUBE's
+# sets include every ROLLUP(event_type, hour) set).
 # ---------------------------------------------------------------------------
 
 def q_events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -411,7 +285,7 @@ def q_corpus_profile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     combines map-side, so profiling a 100 TB corpus is ONE scan plus a
     shuffle of n_sources sketch buffers — never an exact-distinct
     shuffle of the text hashes or a sort for percentiles. This is the
-    profiling pattern the exact queries (domain_doc_stats) cannot
+    profiling pattern the exact group-by queries cannot
     afford at scale when the statistic itself is holistic.
 
     No DuckDB oracle: sketch estimates are engine-specific by design.
@@ -435,23 +309,15 @@ def q_corpus_profile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES = {
-    "domain_doc_stats": q_domain_doc_stats,
     "corpus_profile_sketch": q_corpus_profile_sketch,
     "asof_last_click_before_error": q_asof_last_click,
     "distractor_sample": q_distractor_sample,
-    "revenue_rollup": q_revenue_rollup,
-    "value_percentiles": q_value_percentiles,
-    "clicks_before_error": q_clicks_before_error,
     "events_type_hour_cube": q_events_cube,
     "json_repair_stats": q_json_repair_stats,
 }
 
 ORACLES = {
-    "domain_doc_stats": SQL_DOMAIN_DOC_STATS,
     "asof_last_click_before_error": SQL_ASOF_LAST_CLICK,
-    "revenue_rollup": SQL_REVENUE_ROLLUP,
-    "value_percentiles": SQL_VALUE_PERCENTILES,
-    "clicks_before_error": SQL_CLICKS_BEFORE_ERROR,
     "events_type_hour_cube": SQL_EVENTS_CUBE,
     "json_repair_stats": _sql_json_repair(),
     "distractor_sample": SQL_DISTRACTOR_SAMPLE,

@@ -712,31 +712,6 @@ SELECT doc_id, min(r)::BIGINT AS cluster_id FROM walk GROUP BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# dedup_keep_list — the user-facing dedup OUTPUT: one canonical doc
-# per near-dup cluster (min doc_id), with the number of duplicates it
-# absorbs. Composes clusters → groupBy; the "drop the non-canonical
-# rows" consumer is a J2-style anti-join of documents against this
-# list's complement.
-# ---------------------------------------------------------------------------
-
-def q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clusters = q_dedup_clusters(spark, sf_dir)
-    return (
-        clusters.groupBy(F.col("cluster_id").alias("keep_doc_id"))
-        .agg((F.count("*") - 1).alias("n_absorbed"))
-    )
-
-
-def _sql_keep_list() -> str:
-    return f"""
-WITH clusters AS ({_sql_clusters()})
-SELECT cluster_id AS keep_doc_id,
-       (count(*) - 1)::BIGINT AS n_absorbed
-FROM clusters GROUP BY cluster_id
-"""
-
-
-# ---------------------------------------------------------------------------
 # boilerplate_segments — cross-document boilerplate measurement, the
 # paragraph-dedup step of CC pipelines (headers/footers/cookie banners
 # repeating across pages). Segment = non-overlapping BP_SEG_WORDS-word
@@ -1115,7 +1090,6 @@ LEFT JOIN nd USING (doc_id)
 
 QUERIES = {
     "dedup_exact": q_dedup_exact,
-    "dedup_keep_list": q_dedup_keep_list,
     "dedup_normalized": q_dedup_normalized,
     "dedup_url": q_dedup_url,
     "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
@@ -1136,7 +1110,6 @@ ORACLES = {
     "dedup_minhash_lsh": _sql_minhash(),
     "dedup_clusters": _sql_clusters(),
     "dedup_clusters_star": _sql_clusters(),
-    "dedup_keep_list": _sql_keep_list(),
     "boilerplate_segments": SQL_BOILERPLATE,
     "boilerplate_scrub": SQL_BOILERPLATE_SCRUB,
     "substring_dup_spans": SQL_SUBSTRING_DUP_SPANS,

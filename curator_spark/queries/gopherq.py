@@ -562,6 +562,10 @@ FROM scored
 FW_LINE_WORDS = 10        # stand-in line = 10-word window (no newlines)
 FW_TERMINAL_CHARS = (".", "'", '"', "!", "?")  # FineWeb's stop set
 FW_MIN_PUNCT_LINE_FRAC = 0.12
+# Two bounds are deliberately re-tuned from the upstream FineWeb filter,
+# so keep/drop decisions on real data differ from upstream's: a short
+# line is < FW_MIN_LINE_CHARS (upstream: <= 30), and the duplicated-line
+# character gate is 0.10 (upstream char_duplicates_ratio: 0.01).
 FW_MIN_LINE_CHARS = 30
 FW_MAX_SHORT_LINE_FRAC = 0.67
 FW_MAX_DUP_LINE_CHAR_FRAC = 0.10

@@ -1,12 +1,16 @@
 """Relational coverage queries over the TPC-H-ish tables + events.
 
 These exercise the Spark primitives that SURVEY.md §2 maps the
-reference's capabilities onto: equi-join / broadcast join (J1),
-left-anti join (J2/J3 — the failed-rows and resume anti-joins),
-group-by collect (A1, blocks/simplestrat.py:141-145), counter/histogram
-aggregation (A2/A6), ordering + limit (W1/W2), and analytic windows
-(lag/row_number) that the reference lacks but the Spark engine
-provides as first-class operators.
+reference's capabilities onto: equi-join / broadcast join (J1,
+`top_customers_revenue`), left-anti join (J2/J3 — the failed-rows and
+resume anti-joins, `orders_no_bigline`), group-by collect (A1,
+blocks/simplestrat.py:141-145, `users_by_event_type`), scan + agg
+(A2, `pricing_summary`), ordering + limit (W1/W2), and analytic
+windows that the reference lacks but the Spark engine provides as
+first-class operators: row_number (`latest_event_per_user`), a
+moving-average frame (`value_moving_avg`) and lag + running sum over
+timestamps (`sessionize`). The JSON-unpack histogram (A6/F3) lives in
+advancedq's `json_repair_stats`.
 
 Scale notes: `top_customers_revenue` broadcasts the dimension side
 (customer/nation are small dims); `orders_no_bigline` is a shuffle
@@ -152,27 +156,6 @@ FROM events GROUP BY event_type
 
 
 # ---------------------------------------------------------------------------
-# error_props_histogram — JSON extraction + histogram (reference A6
-# error Counter, base_online:540-541; F3 json decode).
-# ---------------------------------------------------------------------------
-
-def q_error_props_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    return (
-        ev.where(F.col("event_type") == "error")
-        .select(F.get_json_object("props", "$.k").alias("k"))
-        .groupBy("k")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-SQL_ERROR_PROPS_HISTOGRAM = """
-SELECT json_extract_string(props, '$.k') AS k, count(*)::BIGINT AS n
-FROM events WHERE event_type = 'error' GROUP BY 1
-"""
-
-
-# ---------------------------------------------------------------------------
 # latest_event_per_user — row_number window (order-restoring sort W1
 # generalized to per-key latest).
 # ---------------------------------------------------------------------------
@@ -247,41 +230,6 @@ FROM s GROUP BY user_id
 
 
 # ---------------------------------------------------------------------------
-# events_hourly_rollup — event-time bucket aggregation (batch face of a
-# streaming windowed agg).
-# ---------------------------------------------------------------------------
-
-# The registered rollup uses EXACT countDistinct: an
-# approx_count_distinct (HLL) variant can never pass the value-hash
-# oracle (sketch estimates differ between engines by design), so no
-# such variant is kept here — at corpus scale swap the exact distinct
-# for approx_count_distinct when the consumer tolerates estimates.
-def q_events_hourly_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("hour"), "event_type"
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        .withColumn("hour", F.date_format("hour", "yyyy-MM-dd HH:mm:ss"))
-    )
-
-
-SQL_EVENTS_HOURLY = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       event_type,
-       count(*)::BIGINT AS n,
-       round(sum(value), 2) AS sum_value,
-       count(DISTINCT user_id)::BIGINT AS n_users
-FROM events GROUP BY 1, 2
-"""
-
-
-# ---------------------------------------------------------------------------
 # value_moving_avg — per-user 5-event moving average over event time
 # (the reference's deque(50) output-token MVA, base_online:32,581-585,
 # as a proper window frame). One shuffle on user_id; the frame scan is
@@ -310,54 +258,22 @@ FROM events
 """
 
 
-# ---------------------------------------------------------------------------
-# browsers_never_buying — set operations as first-class table ops
-# (SURVEY §2.6: the reference only has Python set membership; Spark
-# gives INTERSECT/EXCEPT as distributed operators): users who clicked
-# AND viewed (INTERSECT) but never purchased (EXCEPT). Both plan as
-# null-safe hash joins on user_id — same shuffle shape as a groupBy.
-# ---------------------------------------------------------------------------
-
-def q_browsers_never_buying(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-
-    def ids(kind: str) -> DataFrame:
-        return ev.where(F.col("event_type") == kind).select("user_id")
-
-    return ids("click").intersect(ids("view")).subtract(ids("purchase"))
-
-
-SQL_BROWSERS_NEVER_BUYING = """
-SELECT user_id FROM events WHERE event_type = 'click'
-INTERSECT
-SELECT user_id FROM events WHERE event_type = 'view'
-EXCEPT
-SELECT user_id FROM events WHERE event_type = 'purchase'
-"""
-
-
 QUERIES = {
     "pricing_summary": q_pricing_summary,
     "value_moving_avg": q_value_moving_avg,
-    "browsers_never_buying": q_browsers_never_buying,
     "top_customers_revenue": q_top_customers,
     "orders_no_bigline": q_orders_no_bigline,
     "users_by_event_type": q_users_by_event_type,
-    "error_props_histogram": q_error_props_histogram,
     "latest_event_per_user": q_latest_event_per_user,
     "sessionize": q_sessionize,
-    "events_hourly_rollup": q_events_hourly_exact,
 }
 
 ORACLES = {
     "pricing_summary": SQL_PRICING_SUMMARY,
     "value_moving_avg": SQL_VALUE_MOVING_AVG,
-    "browsers_never_buying": SQL_BROWSERS_NEVER_BUYING,
     "top_customers_revenue": SQL_TOP_CUSTOMERS,
     "orders_no_bigline": SQL_ORDERS_NO_BIGLINE,
     "users_by_event_type": SQL_USERS_BY_EVENT_TYPE,
-    "error_props_histogram": SQL_ERROR_PROPS_HISTOGRAM,
     "latest_event_per_user": SQL_LATEST_EVENT_PER_USER,
     "sessionize": SQL_SESSIONIZE,
-    "events_hourly_rollup": SQL_EVENTS_HOURLY,
 }

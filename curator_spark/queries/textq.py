@@ -3,8 +3,8 @@
 These are the SQL-expressible faces of the quality-filter pipeline
 (SURVEY.md §2.2 P1/P6, §2.7 F4/F6; north_rule heuristic rules): rule
 statistics, keep/drop decision, PII scrub, token counting,
-fingerprinting, quality scoring. Each Spark program has an oracle SQL
-twin generated from the same constants.
+fingerprinting, chunking. Each Spark program has an oracle SQL twin
+generated from the same constants.
 
 Reference parity notes:
 - rule stats = the Gopher/C4 heuristics named by BASELINE.json
@@ -293,63 +293,6 @@ FROM documents
 
 
 # ---------------------------------------------------------------------------
-# quality_score — composite [0,1] score; every float op is a fixed
-# left-to-right chain so both engines produce bit-identical doubles
-# (rounded to 6 anyway).
-# ---------------------------------------------------------------------------
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    s = ts.all_stats(F.col("text"))
-    swd_cap = F.least(s["stopword_density"] * 2.0, F.lit(1.0))
-    sym_cap = F.least(s["symbol_ratio"] * 5.0, F.lit(1.0))
-    wc = s["word_count"]
-    len_score = F.when(wc >= 30, F.lit(1.0)).otherwise(wc / F.lit(30.0))
-    score = swd_cap * 0.4 + (F.lit(1.0) - sym_cap) * 0.3 + len_score * 0.3
-    return d.select("doc_id", F.round(score, 6).alias("quality_score"))
-
-
-def sql_quality_score() -> str:
-    sym = ts.SYMBOL_CLASS
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-    {sql_words()} AS ws,
-    length(text) - length(regexp_replace(text, '{sym}', '', 'g')) AS symc
-  FROM documents
-), st AS (
-  SELECT doc_id,
-    coalesce(len(ws), -1) AS wc,
-    CASE WHEN len(ws) > 0 THEN symc::DOUBLE / len(ws) ELSE 0.0 END AS symr,
-    CASE WHEN len(ws) > 0
-         THEN len(list_filter(ws, x -> list_contains({sql_stopword_list()}, lower(x))))::DOUBLE
-              / len(ws)
-         ELSE 0.0 END AS swd
-  FROM base
-)
-SELECT doc_id,
-  round(least(swd * 2.0, 1.0) * 0.4
-        + (1.0 - least(symr * 5.0, 1.0)) * 0.3
-        + (CASE WHEN wc >= 30 THEN 1.0 ELSE wc / 30.0 END) * 0.3, 6)
-    AS quality_score
-FROM st
-"""
-
-
-# ---------------------------------------------------------------------------
-# lang_distribution — simple agg (reference A6 error-histogram shape).
-# ---------------------------------------------------------------------------
-
-def q_lang_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = t(spark, sf_dir, "documents")
-    return d.groupBy("lang").agg(F.count("*").alias("n_docs"))
-
-
-def sql_lang_distribution() -> str:
-    return "SELECT lang, count(*)::BIGINT AS n_docs FROM documents GROUP BY lang"
-
-
-# ---------------------------------------------------------------------------
 # doc_winnowing — winnowing fingerprint set (Schleimer et al.): hash
 # every word-3gram, slide a window of W over the hash sequence, keep
 # each window's minimum; the sorted distinct minima fingerprint the
@@ -595,8 +538,6 @@ QUERIES = {
     "doc_fingerprint": q_doc_fingerprint,
     "doc_winnowing": q_doc_winnowing,
     "doc_chunks": q_doc_chunks,
-    "quality_score": q_quality_score,
-    "lang_distribution": q_lang_distribution,
 }
 
 ORACLES = {
@@ -609,6 +550,4 @@ ORACLES = {
     "doc_fingerprint": sql_doc_fingerprint(),
     "doc_winnowing": sql_doc_winnowing(),
     "doc_chunks": sql_doc_chunks(),
-    "quality_score": sql_quality_score(),
-    "lang_distribution": sql_lang_distribution(),
 }

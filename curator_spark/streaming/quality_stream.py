@@ -169,20 +169,24 @@ def checkpoint_lineage(checkpoint_dir: str) -> str:
     import json as _json
     import os as _os
 
+    from py4j.protocol import Py4JError
+
     from curator_spark.pipeline import fsutil
 
     meta_file = checkpoint_dir.rstrip("/") + "/metadata"
     try:
         text = fsutil.read_text(None, meta_file)
         if text is not None:
-            qid = _json.loads(text).get("id")
+            meta = _json.loads(text)
+            qid = meta.get("id") if isinstance(meta, dict) else None
             if qid:
                 return str(qid)
-    except Exception:
-        # broad on purpose: a truncated metadata file raises
-        # json.JSONDecodeError, a remote-FS hiccup raises a py4j
-        # error — any unreadable metadata must degrade to the path
-        # fallback, not kill the stream at its first micro-batch.
+    except (ValueError, OSError, Py4JError):
+        # a truncated or non-UTF-8 metadata file raises ValueError
+        # (json.JSONDecodeError / UnicodeDecodeError), a local read
+        # OSError, a remote-FS hiccup a py4j error — unreadable
+        # metadata must degrade to the path fallback, not kill the
+        # stream at its first micro-batch. Anything else is a bug.
         pass
     if fsutil.is_local_path(checkpoint_dir):
         return _os.path.abspath(checkpoint_dir)

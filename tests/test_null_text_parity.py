@@ -48,7 +48,7 @@ def null_sf_dir(spark, tmp_path_factory):
 @pytest.mark.parametrize(
     "name",
     ["rule_stats", "quality_keepdrop", "token_stats",
-     "gopher_quality_docs", "quality_score", "scrub_pii",
+     "gopher_quality_docs", "scrub_pii",
      "c4_line_filter", "toxicity_score", "doc_chunks"],
 )
 def test_word_count_family_null_parity(spark, null_sf_dir, name):

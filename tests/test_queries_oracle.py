@@ -116,3 +116,26 @@ def test_measured_window_pinned():
     "json_repair_stats"]
     assert MEASURED == expected
     assert list(QUERIES) == expected
+
+
+def test_extra_list_pinned():
+    """EXTRA holds only queries that are the sole query for their code
+    path (the registry docstring names each one's reason). Pin the list
+    so a look-alike variant of a measured operator cannot slip back in,
+    and so a deletion must also remove the name here."""
+    from curator_spark.queries import ALL_QUERIES, EXTRA, EXTRA_QUERIES
+
+    expected = [
+        "quality_full_text",
+        "dedup_clusters_star",
+        "boilerplate_scrub",
+        "events_type_hour_cube",
+        "corpus_profile_sketch",
+        "url_filter",
+        "fineweb_filters",
+        "substring_dup_scrub",
+        "quality_cascade",
+    ]
+    assert EXTRA == expected
+    assert list(EXTRA_QUERIES) == expected
+    assert len(ALL_QUERIES) == 59

@@ -7,10 +7,13 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+from py4j.protocol import Py4JError
 from pyspark.sql import functions as F
 
 from curator_spark.config import QualityConfig
 from curator_spark.engine.schema import PAGES
+from curator_spark.pipeline import fsutil
 from curator_spark.pipeline.snapshot import SnapshotTable, _merge_metas_default
 from curator_spark.streaming.quality_stream import (
     checkpoint_lineage,
@@ -153,3 +156,34 @@ def test_lineage_corrupt_metadata_degrades_to_path(tmp_path):
     d.mkdir()
     (d / "metadata").write_text('{"id": "qid-trunc')  # cut mid-value
     assert checkpoint_lineage(str(d)) == os.path.abspath(str(d))
+
+
+def _raise(exc):
+    def read_text(spark, path):
+        raise exc
+    return read_text
+
+
+@pytest.mark.parametrize(
+    "read_text",
+    [
+        lambda spark, path: '{"id": "qid-tr',  # truncated mid-value
+        lambda spark, path: "[1, 2]",  # valid JSON, not an object
+        _raise(OSError("disk gone")),
+        _raise(Py4JError("remote FS hiccup")),
+    ],
+    ids=["truncated_json", "non_object_json", "oserror", "py4j_error"],
+)
+def test_lineage_unreadable_metadata_falls_back(monkeypatch, tmp_path,
+                                                read_text):
+    monkeypatch.setattr(fsutil, "read_text", read_text)
+    ck = str(tmp_path / "ck")
+    assert checkpoint_lineage(ck) == os.path.abspath(ck)
+
+
+def test_lineage_programming_error_propagates(monkeypatch, tmp_path):
+    # the catch names the failures of an unreadable file; a bug in the
+    # read path must surface, not silently mint a path lineage
+    monkeypatch.setattr(fsutil, "read_text", _raise(AttributeError("bug")))
+    with pytest.raises(AttributeError, match="bug"):
+        checkpoint_lineage(str(tmp_path / "ck"))
