@@ -24,6 +24,7 @@ import sys
 import tempfile
 
 from curator_spark.config import QualityConfig
+from curator_spark.engine.session import default_cores
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -48,8 +49,9 @@ def build_parser() -> argparse.ArgumentParser:
                         "complete) and exit without "
                         "running — metadata-only, no data read")
     p.add_argument("--out", required=True, help="output snapshot-table root")
-    p.add_argument("--cores", type=int,
-                   default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    p.add_argument("--cores", type=int, default=default_cores(),
+                   help="local[N] task slots (default SPARK_GRAFT_CPUS, "
+                        "else this process's CPU affinity)")
     p.add_argument("--master", default=None,
                    help="override master (default local[cores]; under "
                         "spark-submit pass --master there instead)")

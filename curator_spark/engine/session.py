@@ -31,6 +31,13 @@ _WORKER_THREAD_VARS = (
 )
 
 
+def default_cores() -> int:
+    """Task slots for `local[N]` when the caller names none:
+    SPARK_GRAFT_CPUS if set, else the CPUs this process may run on.
+    More slots than CPUs only oversubscribe the Python workers."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "curator_spark",
     cores: int | None = None,
@@ -38,7 +45,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(32, cores)
     for var in _WORKER_THREAD_VARS:

@@ -1,11 +1,14 @@
 """Gopher/C4-style text statistics as NATIVE Catalyst column expressions.
 
 The reference computes nothing like these (its per-row work is an LLM
-call); per the north rule they are the heuristic-rule stage of the
-quality pipeline. Expressing them as built-in expressions (split /
-size / filter / array_distinct / length arithmetic) keeps the whole
-rule stage inside whole-stage codegen — no Python worker round-trip —
-which is what survives a 100 TB scan.
+call). Expressed as built-in expressions (split / size / filter /
+array_distinct / length arithmetic) they run inside whole-stage
+codegen with no Python worker round-trip. Their users are the
+DuckDB-twinned queries and the cascade student's features
+(stages/rules.with_rule_stats). The quality pipeline computes the
+same values inside its Arrow scoring UDF instead
+(functions/rule_core.py), where the text already is, so it does not
+scan every page five more times with JVM regexes.
 
 Every definition here has an exact DuckDB-SQL twin in
 __spark_entry__.oracle_sql() (same split semantics, same length

@@ -74,25 +74,38 @@ def encode_texts(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
     return codes, offsets
 
 
-def _segment_sums(values: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
-    """Per-row sums of values[starts[r]:ends[r]] (float64).
+def _gather_padded(table: np.ndarray, idx: np.ndarray) -> np.ndarray:
+    """float64 table[idx] (along axis 0) plus one trailing zero row, for
+    _segment_sums. The gather writes straight into the padded buffer,
+    so the (n_idx x n_langs) matrix is written once and never copied
+    again just to append the pad row. Indices are always in
+    range (hashed or bigram ids), so mode="clip" changes no value; it
+    only lets np.take write into `out` without a temporary."""
+    table = np.asarray(table, dtype=np.float64)
+    out = np.empty((len(idx) + 1,) + table.shape[1:], dtype=np.float64)
+    np.take(table, idx, axis=0, out=out[:-1], mode="clip")
+    out[-1] = 0.0
+    return out
 
-    Uses np.add.reduceat so each segment is reduced INDEPENDENTLY —
-    the per-row result is a pure function of that row's values, not of
-    batch composition (a whole-batch cumsum would leak prefix rounding
-    across rows and break partitioning-independence of the scores).
+
+def _segment_sums(padded: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """Per-row sums of padded[starts[r]:ends[r]] along axis 0 (float64).
+
+    `padded` comes from _gather_padded: its trailing zero row keeps an
+    end index == the gathered length in bounds. Uses np.add.reduceat so
+    each segment is reduced INDEPENDENTLY — the per-row result is a
+    pure function of that row's values, not of batch composition (a
+    whole-batch cumsum would leak prefix rounding across rows and
+    break partitioning-independence of the scores).
     """
-    out = np.zeros(len(starts), dtype=np.float64)
+    out = np.zeros((len(starts),) + padded.shape[1:], dtype=np.float64)
     nonempty = ends > starts
-    if not values.size or not nonempty.any():
+    if not nonempty.any():
         return out
-    # pad one trailing zero so an end index == len(values) stays in bounds
-    padded = np.concatenate([values.astype(np.float64, copy=False), [0.0]])
     bounds = np.empty(2 * int(nonempty.sum()), dtype=np.int64)
     bounds[0::2] = starts[nonempty]
     bounds[1::2] = ends[nonempty]
-    red = np.add.reduceat(padded, bounds)
-    out[nonempty] = red[0::2]
+    out[nonempty] = np.add.reduceat(padded, bounds, axis=0)[0::2]
     return out
 
 
@@ -236,18 +249,8 @@ def langid_scores(
     # reduceat(axis=0) adds rows sequentially per column, the same
     # per-language summation order as the per-lang loop it replaces
     # (f32->f64 is exact), so scores are bit-identical.
-    table_t = _table_t_cache(table)
-    mean_ll = np.zeros((len(langs), n), dtype=np.float64)
-    nonempty = ends > starts
-    if tri.size and nonempty.any():
-        g = table_t[tri]  # (n_tri, n_langs) float64
-        bounds = np.empty(2 * int(nonempty.sum()), dtype=np.int64)
-        bounds[0::2] = starts[nonempty]
-        bounds[1::2] = ends[nonempty]
-        # pad a zero row so an end index == len(g) stays in bounds
-        g = np.concatenate([g, np.zeros((1, g.shape[1]))])
-        red = np.add.reduceat(g, bounds, axis=0)
-        mean_ll[:, nonempty] = red[0::2].T
+    g = _gather_padded(_table_t_cache(table), tri)  # (n_tri + 1, n_langs)
+    mean_ll = _segment_sums(g, starts, ends).T
     mean_ll /= safe
     # softmax over languages per row
     mx = mean_ll.max(axis=0)
@@ -277,7 +280,7 @@ def perplexities(
     starts = np.minimum(offsets[:-1], len(bi))
     ends = np.minimum(np.maximum(offsets[1:] - 1, offsets[:-1]), len(bi))
     counts = (ends - starts).astype(np.float64)
-    sums = _segment_sums(lm[bi], starts, ends)
+    sums = _segment_sums(_gather_padded(lm, bi), starts, ends)
     out = np.exp(-sums / np.maximum(counts, 1.0))
     out[counts < 1.0] = 1e9
     return out

@@ -51,8 +51,8 @@ def _default_stage_objs() -> list:
     hashing only the thin wrappers would serve stale cached output
     after a helper edit — ADVICE r2), plus the helper modules holding
     the code those stages close over (model scoring cores, text
-    statistics, scrub regexes)."""
-    from curator_spark.functions import scrub_core, textstats, vectorized
+    statistics, the Arrow rule-stat kernels, scrub regexes)."""
+    from curator_spark.functions import rule_core, scrub_core, textstats, vectorized
     from curator_spark.stages import decide, extract, rules, score
 
     return [
@@ -62,6 +62,7 @@ def _default_stage_objs() -> list:
         decide,
         vectorized,
         textstats,
+        rule_core,
         scrub_core,
     ]
 

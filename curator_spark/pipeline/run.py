@@ -7,7 +7,8 @@ The Spark restatement of the reference's `LLM.__call__` lifecycle
 
 re-expressed as: read parquet → derive url-hash bucket_id →
 anti-select already-committed buckets (row-level resume, reference:
-base_request_processor.py:609-651) → native rules + Arrow UDF scoring →
+base_request_processor.py:609-651) → one Arrow UDF for the model scores
+and rule stats + native rule flags and decision →
 single shuffle on bucket_id → partitioned write → atomic manifest
 commit carrying per-bucket lineage counters (the reference's
 OnlineStatusTracker counters, online_status_tracker.py:46-95).
@@ -39,7 +40,7 @@ from curator_spark.pipeline.fingerprint import run_fingerprint
 from curator_spark.pipeline.catalog import CuratedTable, open_table
 from curator_spark.stages.decide import with_decision
 from curator_spark.stages.extract import extracted_text, with_extracted_text
-from curator_spark.stages.rules import with_rule_flags, with_rule_stats
+from curator_spark.stages.rules import with_rule_flags
 from curator_spark.stages.score import with_scores
 
 OUT_COLS = [
@@ -78,12 +79,13 @@ def quality_plan(
 ) -> DataFrame:
     """The full logical plan over a pages-shaped DataFrame (no I/O).
 
-    Scores langid + perplexity + scrub in ONE ArrowEvalPython node
-    (one text round-trip per batch, stages/score.py).
+    Scores langid + perplexity + scrub + the rule stats in ONE
+    ArrowEvalPython node (one text round-trip per batch,
+    stages/score.py); the rule flags and the decision are native
+    comparisons on the returned columns.
     """
-    df = with_rule_stats(df, text_col)
-    df = with_rule_flags(df, cfg)
     df = with_scores(df, cfg, text_col)
+    df = with_rule_flags(df, cfg)
     df = with_decision(df, cfg)
     # dropped rows carry no scrubbed payload (they are not emitted downstream)
     df = df.withColumn(

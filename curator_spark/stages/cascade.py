@@ -68,8 +68,10 @@ CASCADE_BAND = (0.2, 0.8)  # student probs inside [lo, hi] go to teacher
 
 
 def with_native_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Rule stats (shared with the rules stage) plus per-language
-    marker-word densities — all JVM-side column expressions.
+    """Rule stats (stages.rules.with_rule_stats, value-identical to the
+    pipeline's Arrow-computed ones) plus per-language marker-word
+    densities — all JVM-side column expressions, so the student needs
+    no Python round-trip.
 
     Marker hits use the trie-regex `regexp_count` form
     (ts._trie_regex, the stopword-stage trick): an interpreted

@@ -1,8 +1,13 @@
-"""Heuristic quality rules (Gopher/C4 style) as native column exprs.
+"""Heuristic quality rules (Gopher/C4 style).
 
-Entirely JVM-side: split/size/filter/array_distinct/length arithmetic
-inside whole-stage codegen. Each rule emits a boolean `fail_rule_*`
-column; stats columns are kept for metrics and debugging.
+`with_rule_flags` turns the five `STAT_COLS` into boolean
+`fail_rule_*` columns with native comparisons. The pipeline
+(`quality_plan`) takes the stats themselves from the scoring UDF's
+`rules` group (stages/score.py, functions/rule_core.py), which reads
+the text batch the models already receive. `with_rule_stats` is the
+JVM-side form of the same stats (split/size/filter/array_distinct/
+length arithmetic inside whole-stage codegen); it stays for the
+cascade student's Python-free features (stages/cascade.py).
 """
 
 from __future__ import annotations

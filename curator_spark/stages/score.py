@@ -1,5 +1,5 @@
-"""The model-scoring stage: langid, perplexity and PII/toxicity scrub
-in ONE Arrow round-trip per batch.
+"""The scoring stage: langid, perplexity, PII/toxicity scrub and the
+Gopher/C4 rule stats in ONE Arrow round-trip per batch.
 
 A UDF's cost is the Arrow transfer of its input column plus the
 interpreted compute, so every scored column comes out of one iterator
@@ -8,9 +8,12 @@ node each and ship the text JVM->Python->JVM once per node. Callers
 pick the column groups they need (`outputs`, a subset of `GROUPS`);
 the return schema follows that subset, the model groups share one
 codepoint-encode pass, and the scrub regexes run only when asked for.
-The compute cores are shared with the oracle (functions/vectorized.py,
-functions/scrub_core.py), so a column is bit-identical whichever
-subset produced it.
+The `rules` group computes the five rule stats from Arrow C++ kernels
+over the same batch (functions/rule_core.py), so the pipeline does not
+scan the text again with JVM regexes for them. The compute cores are
+shared with the oracle (functions/vectorized.py,
+functions/scrub_core.py) or value-identical to it (rule_core), so a
+column is bit-identical whichever subset produced it.
 
 The model tables are built or loaded once per Python worker and reused
 across batches (`SPARK_LANGID_NPZ`, or the same file name under
@@ -29,15 +32,20 @@ from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyspark import SparkContext, TaskContext
+from pyspark.files import SparkFiles
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from curator_spark.config import QualityConfig
 from curator_spark.functions import vectorized as V
+from curator_spark.functions.rule_core import rule_stats
 from curator_spark.functions.scrub_core import scrub_series
+from curator_spark.stages.rules import STAT_COLS
 
-GROUPS = ("langid", "perplexity", "scrub")
+GROUPS = ("langid", "perplexity", "scrub", "rules")
 ALL = frozenset(GROUPS)
 _MODEL_GROUPS = frozenset({"langid", "perplexity"})
 _COUNTS = ("emails", "ids", "phones", "toxic")
@@ -46,6 +54,8 @@ _SCHEMA = {
     "perplexity": "perplexity double",
     "scrub": "scrubbed_text string, "
     + ", ".join(f"{c} long" for c in _COUNTS),
+    "rules": "word_count int, "
+    + ", ".join(f"{c} double" for c in STAT_COLS[1:]),
 }
 
 # Shipped artifacts, loaded once per worker per path: every task
@@ -62,14 +72,14 @@ def resolve_models(
     path = os.environ.get("SPARK_LANGID_NPZ", "")
     if not path:
         return V.get_langid_table(langs), langs, V.get_bigram_lm()
-    try:
-        from pyspark.files import SparkFiles
-
+    # SparkFiles resolves only inside a task or on a driver with a live
+    # SparkContext (elsewhere, e.g. the oracle, its getter fails on an
+    # assert): without either, use the path as given
+    in_task = TaskContext.get() is not None
+    if in_task or SparkContext._active_spark_context is not None:
         cand = SparkFiles.get(os.path.basename(path))
         if os.path.exists(cand):
             path = cand
-    except Exception:
-        pass  # no SparkContext in this process: use the path as given
     if path not in _ARTIFACTS:
         _ARTIFACTS[path] = V.load_artifacts(path)
     table, lm, art_langs = _ARTIFACTS[path]
@@ -129,6 +139,9 @@ def make_score_udf(cfg: QualityConfig, outputs: Iterable[str] = ALL):
                     out[c] = pd.array(
                         np.where(nulls, None, counts[c].values), dtype="Int64"
                     )
+            if "rules" in outputs:
+                arr = pa.Array.from_pandas(texts, type=pa.large_string())
+                out.update(rule_stats(arr))
             yield pd.DataFrame(out)
 
     return score_udf
@@ -142,7 +155,7 @@ def with_scores(
 ) -> DataFrame:
     """Add the columns of the requested groups from one Arrow pass:
     langid -> lang_pred, lang_score; perplexity -> perplexity;
-    scrub -> scrubbed_text, scrub_counts."""
+    scrub -> scrubbed_text, scrub_counts; rules -> the five STAT_COLS."""
     outputs = _groups(outputs)
     df = df.withColumn("_score", make_score_udf(cfg, outputs)(F.col(text_col)))
     s = F.col("_score")
@@ -156,4 +169,6 @@ def with_scores(
         # NULL from the UDF means "scrub touched nothing"
         cols["scrubbed_text"] = F.coalesce(s["scrubbed_text"], F.col(text_col))
         cols["scrub_counts"] = F.struct(*(s[c].alias(c) for c in _COUNTS))
+    if "rules" in outputs:
+        cols.update({c: s[c] for c in STAT_COLS})
     return df.withColumns(cols).drop("_score")

@@ -4,7 +4,8 @@ The reference is a batch system whose "streaming" is incremental file
 append + resume bookkeeping (reference: base_online_request_processor
 .py:609-631 — append one JSONL line per completed response; SURVEY
 §2.9). Spark restates that capability properly: the SAME logical plan
-(`quality_plan` — rules exprs + Arrow UDF stages + scrub, all
+(`quality_plan` — one Arrow scoring UDF for the models, the scrub
+and the rule stats, then native rule flags and decision, all
 stateless maps) runs unchanged under `readStream`, and the streaming
 engine's checkpoint (source offsets + file-sink transaction log)
 replaces the reference's completed-id resume scan: a killed run

@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 import pytest
 
@@ -15,12 +13,8 @@ N_SMALL = 1200
 
 @pytest.fixture(scope="session")
 def spark():
-    # one task slot per CPU the suite may use (the Tier-1 command
-    # exports SPARK_GRAFT_CPUS); more slots than CPUs only oversubscribe
-    cores = int(
-        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
-    )
-    s = get_spark("curator-spark-tests", cores=cores, shuffle_partitions=16)
+    # one task slot per CPU the suite may use (engine.session.default_cores)
+    s = get_spark("curator-spark-tests", shuffle_partitions=16)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

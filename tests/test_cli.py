@@ -168,3 +168,44 @@ def test_shipped_npz_loaded_once_per_worker(tmp_path, monkeypatch):
     # the artifact's LM is the one scored with, not a worker retrain
     _, shipped_lm, _ = V.load_artifacts(npz)
     np.testing.assert_array_equal(lm, shipped_lm)
+
+
+def test_spark_files_lookup_errors_propagate(spark, tmp_path, monkeypatch):
+    """Only a process with no Spark context skips the SparkFiles lookup
+    and uses the artifact path as given; an error inside the lookup
+    itself (a programming error) propagates instead of being taken for
+    "no context"."""
+    from pyspark import SparkContext
+    from pyspark.files import SparkFiles
+
+    from curator_spark.config import QualityConfig
+    from curator_spark.stages.score import resolve_models
+
+    langs = QualityConfig().langs
+    npz = str(tmp_path / "langid_lm.npz")
+    V.save_artifacts(npz, langs)
+    monkeypatch.setenv("SPARK_LANGID_NPZ", npz)
+
+    def broken(cls, filename):
+        raise AttributeError("broken SparkFiles lookup")
+
+    monkeypatch.setattr(SparkFiles, "get", classmethod(broken))
+    with pytest.raises(AttributeError, match="broken SparkFiles lookup"):
+        resolve_models(langs)
+    # no context at all: the lookup is skipped, not attempted
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    assert resolve_models(langs)[1] == langs
+
+
+def test_default_cores_shared_by_session_and_cli(monkeypatch):
+    """get_spark and --cores fall back to one helper: SPARK_GRAFT_CPUS,
+    else this process's CPU affinity (never a fixed 32)."""
+    from curator_spark.engine.session import default_cores
+
+    args = ["--input", "in", "--out", "out"]
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cores() == 3
+    assert cli.build_parser().parse_args(args).cores == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert default_cores() == len(os.sched_getaffinity(0))
+    assert cli.build_parser().parse_args(args).cores == default_cores()

@@ -48,8 +48,11 @@ def test_filter_pushdown_to_parquet(spark, pages):
 
 
 def test_native_rule_stage_is_codegen_no_python(spark, pages, cfg):
-    """The whole heuristic-rule stage stays JVM-side: no Python eval
-    operators, and the project runs inside WholeStageCodegen."""
+    """The cascade student's rule stats (stages/cascade.py
+    with_native_features) stay JVM-side: no Python eval operators, and
+    the project runs inside WholeStageCodegen. The pipeline itself
+    takes its rule stats from the scoring UDF instead
+    (test_quality_plan_scores_in_one_arrow_node)."""
     from curator_spark.stages.decide import with_decision
     from curator_spark.stages.rules import with_rule_flags, with_rule_stats
 
@@ -79,15 +82,45 @@ def test_udf_stages_are_arrow_batched(spark, pages, cfg):
     assert "BatchEvalPython" not in plan
 
 
+def _expression_classes(df) -> set[str]:
+    """Simple class names of every node and expression in the
+    optimized logical plan."""
+    import json
+
+    found: set[str] = set()
+
+    def walk(x) -> None:
+        if isinstance(x, dict):
+            if isinstance(x.get("class"), str):
+                found.add(x["class"].rsplit(".", 1)[-1])
+            for v in x.values():
+                walk(v)
+        elif isinstance(x, list):
+            for v in x:
+                walk(v)
+
+    walk(json.loads(df._jdf.queryExecution().optimizedPlan().toJSON()))
+    return found
+
+
 def test_quality_plan_scores_in_one_arrow_node(spark, pages, cfg):
-    """langid, perplexity and scrub share ONE Arrow round-trip of the
-    text per batch — one ArrowEvalPython node in the whole plan."""
+    """langid, perplexity, scrub and the rule stats share ONE Arrow
+    round-trip of the text per batch — one ArrowEvalPython node in the
+    whole plan — and no JVM text scan for the rule stats is left over,
+    so they are never computed twice."""
     from curator_spark.pipeline.run import OUT_COLS, quality_plan, with_bucket
 
     df = with_bucket(pages, cfg.n_buckets)
-    plan = _executed(quality_plan(df, cfg, "text").select(*OUT_COLS))
+    out = quality_plan(df, cfg, "text").select(*OUT_COLS)
+    plan = _executed(out)
     assert plan.count("ArrowEvalPython") == 1, plan
     assert "BatchEvalPython" not in plan, plan
+    classes = _expression_classes(out)
+    assert "ArrowEvalPython" in classes  # the walk sees the whole plan
+    leftover = {
+        "RegExpCount", "StringSplit", "ArrayDistinct", "StringTranslate"
+    } & classes
+    assert not leftover, leftover
 
 
 def test_small_dim_join_broadcasts(spark, sf_dir="/root/testdata/sf0.001"):

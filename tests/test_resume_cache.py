@@ -144,6 +144,24 @@ def test_compaction_preserves_data_and_resume(spark, pages_path, cfg, tmp_path):
     assert pipe.compact(spark, fp) is None
 
 
+def test_rule_core_source_is_in_stage_code_hash(monkeypatch):
+    """The pipeline's rule stats come from functions/rule_core.py, so an
+    edit there must change every run fingerprint."""
+    import inspect
+
+    from curator_spark.functions import rule_core
+    from curator_spark.pipeline.fingerprint import stage_code_hash
+
+    before = stage_code_hash()
+    real = inspect.getsource
+
+    def edited(obj):
+        return real(obj) + ("# edit\n" if obj is rule_core else "")
+
+    monkeypatch.setattr(inspect, "getsource", edited)
+    assert stage_code_hash() != before
+
+
 def test_stage_code_edit_invalidates_fingerprint(tmp_path, cfg, pages_path):
     """Closure-sensitive caching (reference: test_caching.py:76-96 —
     editing a nested closure invalidates): a stage-code change flips

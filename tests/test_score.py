@@ -7,7 +7,8 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from curator_spark.stages.score import with_scores
+from curator_spark.stages.rules import STAT_COLS
+from curator_spark.stages.score import GROUPS, with_scores
 
 ROWS = [
     (0, None),
@@ -22,6 +23,7 @@ COLS = {
     "perplexity": ["perplexity"],
     "scrub": ["scrubbed_text"]
     + [f"scrub_counts.{c}" for c in ("emails", "ids", "phones", "toxic")],
+    "rules": list(STAT_COLS),
 }
 
 
@@ -37,13 +39,14 @@ def _scored(spark, cfg, outputs) -> pd.DataFrame:
 
 @pytest.fixture(scope="module")
 def full(spark, cfg):
-    return _scored(spark, cfg, ("langid", "perplexity", "scrub"))
+    return _scored(spark, cfg, GROUPS)
 
 
 def test_full_scorer_edge_rows(full):
     null, pii = full.iloc[0], full.iloc[3]
     assert null["lang_pred"] == "und" and null["perplexity"] == 1e9
     assert null["scrubbed_text"] is None and pd.isna(null["emails"])
+    assert null["word_count"] == -1 and (null[list(STAT_COLS[1:])] == 0.0).all()
     assert pii["scrubbed_text"] == "Mail <EMAIL> or call <PHONE>, you <TOX>."
     assert (pii[["emails", "phones", "toxic"]] == 1).all()
     # untouched rows come back byte-identical through the coalesce
@@ -52,7 +55,7 @@ def test_full_scorer_edge_rows(full):
 
 
 @pytest.mark.parametrize(
-    "outputs", [("langid",), ("scrub",), ("langid", "perplexity")]
+    "outputs", [("langid",), ("scrub",), ("rules",), ("langid", "perplexity")]
 )
 def test_subset_columns_match_full_scorer(spark, cfg, full, outputs):
     sub = _scored(spark, cfg, outputs)
