@@ -520,7 +520,9 @@ def main() -> None:
         return
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from curator_spark.engine.session import default_cores
+
+    cores = default_cores()
     try:
         sf = float(
             os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1

@@ -31,6 +31,42 @@ def words(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda w: w != F.lit(""))
 
 
+# The word-window helpers below take the NAME of a word-array column
+# the caller has already projected (`.withColumn("ws", words(...))`),
+# never an expression: a higher-order function's lambda re-evaluates a
+# captured outer expression once per element, so an inline split
+# re-tokenizes the whole page for every window — O(words²) per row.
+
+
+def word_ngrams(ws: str, n: int) -> Column:
+    """Overlapping space-joined word n-grams of the array column `ws`;
+    empty when it holds fewer than n words."""
+    arr = F.col(ws)
+    cnt = F.size(arr)
+    return F.when(
+        cnt >= n,
+        F.transform(
+            F.sequence(F.lit(1), cnt - (n - 1)),
+            lambda i: F.array_join(F.slice(arr, i, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def word_chunks(ws: str, size: int) -> Column:
+    """Non-overlapping space-joined `size`-word windows of the array
+    column `ws` (the last may be partial); empty when it holds no
+    words."""
+    arr = F.col(ws)
+    cnt = F.size(arr)
+    return F.when(
+        cnt > 0,
+        F.transform(
+            F.sequence(F.lit(1), F.ceil(cnt / F.lit(float(size))).cast("int")),
+            lambda i: F.array_join(F.slice(arr, (i - 1) * size + 1, size), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def word_count(text: Column) -> Column:
     # regexp_count of non-ws RUNS, not size(filter(split(...))): the
     # split materializes a per-row token array only to take its

@@ -38,6 +38,7 @@ import os
 import uuid
 from typing import Any
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 from curator_spark.pipeline.snapshot import SnapshotTable
@@ -558,7 +559,7 @@ def open_table(
     if fmt is None and spark is not None:
         try:
             fmt = spark.conf.get(FORMAT_CONF, None)
-        except Exception:
+        except Py4JError:  # session's JVM gone: fall through to env
             fmt = None
     if fmt is None:
         fmt = os.environ.get(FORMAT_ENV, "local")

@@ -553,18 +553,20 @@ class NearDupIndex(DedupIndex):
         )
 
     def _exploded_keys(self, df: DataFrame) -> DataFrame:
-        from curator_spark.functions.textstats import words
+        from curator_spark.functions.textstats import word_ngrams, words
         from curator_spark.queries.dedupq import (
             LSH_BANDS,
             MINHASH_K,
             _band_col,
             _minhash_agg_cols,
-            _shingles2,
         )
 
         sh = df.select(
             F.col(self.id_col).alias("__rid"),
-            F.explode(_shingles2(words(F.expr(self.text_expr)))).alias("s"),
+            words(F.expr(self.text_expr)).alias("__ws"),
+        ).select(
+            "__rid",
+            F.explode(F.array_distinct(word_ngrams("__ws", 2))).alias("s"),
         ).select("__rid", F.md5(F.col("s").cast("binary")).alias("h"))
         sig = sh.groupBy("__rid").agg(*_minhash_agg_cols())
         r = MINHASH_K // LSH_BANDS
@@ -627,8 +629,7 @@ class NearDupIndex(DedupIndex):
         band collision) are governed by the banding curve and are not
         recoverable here.
         """
-        from curator_spark.functions.textstats import words
-        from curator_spark.queries.dedupq import _shingles2
+        from curator_spark.functions.textstats import word_ngrams, words
 
         cand_canon = (
             marked.where(F.col("near_dup_candidate"))
@@ -660,21 +661,22 @@ class NearDupIndex(DedupIndex):
             .join(canon_filter, "__canon", "leftsemi")
             .groupBy("__canon")
             .agg(F.min("__ctext").alias("__ctext"))
+            .select("__canon", words(F.col("__ctext")).alias("__cws"))
             .select(
                 "__canon",
-                _shingles2(words(F.col("__ctext"))).alias("__csh"),
+                F.array_distinct(word_ngrams("__cws", 2)).alias("__csh"),
             )
         )
         # shingle only the flagged rows: candidates are typically a
         # small fraction of a crawl batch, and the shingle expression
         # (regex split + 2-gram concat) is the costly part of this
         # projection — non-candidates keep a NULL and skip the work
+        is_cand = F.col("near_dup_candidate")
         out = marked.withColumn(
+            "__ws_b", F.when(is_cand, words(F.expr(self.text_expr)))
+        ).withColumn(
             "__csh_b",
-            F.when(
-                F.col("near_dup_candidate"),
-                _shingles2(words(F.expr(self.text_expr))),
-            ),
+            F.when(is_cand, F.array_distinct(word_ngrams("__ws_b", 2))),
         )
         canon_lookup = canon_sh.withColumnRenamed(
             "__canon", "near_dup_canonical"
@@ -700,5 +702,5 @@ class NearDupIndex(DedupIndex):
                     F.lit(False),
                 ),
             )
-            .drop("__csh_b", "__csh")
+            .drop("__ws_b", "__csh_b", "__csh")
         )

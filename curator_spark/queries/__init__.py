@@ -20,8 +20,10 @@ measured one:
   large-star/small-star components solver (`star_contract_components`;
   dedup_clusters takes the driver union-find route at this size).
 - boilerplate_scrub: the order-preserving boilerplate removal step
-  over boilerplate_segments; its 10k-segment test guards the word-array
-  lambdas against quadratic re-evaluation.
+  over boilerplate_segments; its 10k-segment test is the end-to-end
+  runtime pin for per-doc cost growing with document length (the
+  plan-level guard against a re-split inside a word-window lambda is
+  tests/test_plans.py's lint over every registry query).
 - events_type_hour_cube: the one grouping-sets (CUBE) query; CUBE's
   sets include every ROLLUP set.
 - corpus_profile_sketch: HLL / GK sketch aggregates (no DuckDB twin;

@@ -67,11 +67,13 @@ def parquet_row_count(df: DataFrame) -> int | None:
     for non-local / non-parquet inputs (a real deployment reads
     catalog stats or Iceberg snapshot row counts the same way);
     callers fall back to count() then."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from py4j.protocol import Py4JError
+
     try:
-        from urllib.parse import unquote, urlparse
-
-        import pyarrow.parquet as pq
-
         files = df.inputFiles()
         if not files:
             return None
@@ -82,5 +84,5 @@ def parquet_row_count(df: DataFrame) -> int | None:
                 return None
             total += pq.ParquetFile(unquote(parsed.path)).metadata.num_rows
         return total
-    except Exception:
+    except (OSError, pa.ArrowInvalid, Py4JError):
         return None

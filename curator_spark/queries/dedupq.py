@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from curator_spark.functions.textstats import word_chunks, word_ngrams, words
 from curator_spark.queries.common import spread, sql_words, t
 
 MINHASH_K = 16         # OPH signature slots (one per hex digit bucket)
@@ -39,25 +40,8 @@ JACCARD_THRESHOLD = 0.5  # 2-gram shingle Jaccard for near-dup pairs
 JACCARD_MAX_DF = 64
 
 
-# canonical repo-wide word definition — delegate, don't re-implement:
-# three query modules import _words from here, and a drifted duplicate
-# of the tokenizer would silently split the oracles' "identical split
-# semantics" invariant
-from curator_spark.functions.textstats import words as _words  # noqa: E402
-
-
-def _shingles2(ws):
-    """Distinct word-2gram shingles; empty when fewer than 2 words."""
-    n = F.size(ws)
-    sh = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.concat_ws(" ", F.element_at(ws, i), F.element_at(ws, i + 1)),
-    )
-    return F.when(n >= 2, F.array_distinct(sh)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
+# DuckDB twin of F.array_distinct(word_ngrams("ws", 2)): distinct
+# word-2gram shingles, empty when fewer than 2 words.
 SQL_SHINGLES2 = (
     "CASE WHEN len(ws) >= 2 THEN list_distinct(list_transform("
     "range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1])) "
@@ -198,8 +182,8 @@ FROM raw GROUP BY 1
 def q_dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     d = spread(d, spark)
-    sh = d.select(
-        "doc_id", F.explode(_shingles2(_words(F.col("text")))).alias("sh")
+    sh = d.withColumn("ws", words(F.col("text"))).select(
+        "doc_id", F.explode(F.array_distinct(word_ngrams("ws", 2))).alias("sh")
     )
     # df cutoff BEFORE any posting list materializes: pass 1 is a
     # map-side-combined count whose output is one row per DISTINCT hot
@@ -317,8 +301,8 @@ def _band_col(b: int, r: int):
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     d = spread(d, spark)
-    sh = d.select(
-        "doc_id", F.explode(_shingles2(_words(F.col("text")))).alias("sh")
+    sh = d.withColumn("ws", words(F.col("text"))).select(
+        "doc_id", F.explode(F.array_distinct(word_ngrams("ws", 2))).alias("sh")
     ).select("doc_id", F.md5(F.col("sh").cast("binary")).alias("h"))
     sig = sh.groupBy("doc_id").agg(*_minhash_agg_cols())
     r = MINHASH_K // LSH_BANDS
@@ -727,26 +711,10 @@ BP_SEG_WORDS = 4
 BP_MIN_DOCS = 3
 
 
-def _segments(ws):
-    """Non-overlapping BP_SEG_WORDS-word segments (last may be partial)."""
-    n = F.size(ws)
-    return F.when(
-        n > 0,
-        F.transform(
-            F.sequence(
-                F.lit(1), F.ceil(n / F.lit(float(BP_SEG_WORDS))).cast("int")
-            ),
-            lambda i: F.array_join(
-                F.slice(ws, (i - 1) * BP_SEG_WORDS + 1, BP_SEG_WORDS), " "
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def q_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(t(spark, sf_dir, "documents"), spark)
-    segs = d.select(
-        "doc_id", F.explode(_segments(_words(F.col("text")))).alias("seg")
+    segs = d.withColumn("ws", words(F.col("text"))).select(
+        "doc_id", F.explode(word_chunks("ws", BP_SEG_WORDS)).alias("seg")
     )
     bp = (
         segs.groupBy("seg")
@@ -796,9 +764,9 @@ def boilerplate_scrub_frame(d: DataFrame) -> DataFrame:
     factored out so the pathological-shape property test
     (tests/test_boilerplate_pathological.py: one 10k-segment doc) can drive it on a
     constructed corpus."""
-    segs = d.select(
+    segs = d.withColumn("ws", words(F.col("text"))).select(
         "doc_id",
-        F.posexplode(_segments(_words(F.col("text")))).alias("pos", "seg"),
+        F.posexplode(word_chunks("ws", BP_SEG_WORDS)).alias("pos", "seg"),
     )
     bp = (
         segs.groupBy("seg")

@@ -72,21 +72,10 @@ C4_TERMINAL_CHARS = (".", "!", "?", '"')
 # gopher_repetition
 # ---------------------------------------------------------------------------
 
-def _word_ngrams(ws: Column, n: int) -> Column:
-    """Space-joined word n-grams of the row's word array (empty array
-    when the doc has fewer than n words)."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(ws) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
-    )
-    return F.when(F.size(ws) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def _rep_chars(ws: Column, n: int) -> Column:
-    """struct(top, dup): per-row repetition character masses for word
-    n-grams, via run-length fold over the SORTED n-gram array.
+def _rep_chars(ws: str, n: int) -> Column:
+    """struct(top, dup): per-row repetition character masses for the
+    word n-grams of the word-array column `ws`, via run-length fold
+    over the SORTED n-gram array.
 
     top = max over distinct n-grams of count * non-space-chars(ngram)
     dup = sum over n-grams with count >= 2 of count * non-space-chars
@@ -96,7 +85,7 @@ def _rep_chars(ws: Column, n: int) -> Column:
     n-gram = length - (n-1).  Weighted-max (count * chars) avoids any
     tie-break dependency a plain argmax-of-count would have.
     """
-    sorted_ng = F.array_sort(_word_ngrams(ws, n))
+    sorted_ng = F.array_sort(ts.word_ngrams(ws, n))
     zero = F.lit(0).cast("long")
     init = F.struct(
         F.lit("").alias("prev"),
@@ -151,14 +140,13 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interpreted HOFs are not CSE'd within a projection (1.32 ->
     # 1.16 s on the sf0.1 bench row)
     d = d.withColumn("ws", ts.words(F.col("text")))
-    ws = F.col("ws")
     nws = ts.non_ws_chars(F.col("text"))
     d = d.select(
         "doc_id",
         nws.alias("nws"),
-        _rep_chars(ws, 2).alias("r2"),
-        _rep_chars(ws, 3).alias("r3"),
-        _rep_chars(ws, 5).alias("r5"),
+        _rep_chars("ws", 2).alias("r2"),
+        _rep_chars("ws", 3).alias("r3"),
+        _rep_chars("ws", 5).alias("r5"),
     )
     return d.select(
         "doc_id",
@@ -346,10 +334,7 @@ def _c4_keep_line(l: Column) -> Column:
     term = F.lit(False)
     for ch in C4_TERMINAL_CHARS:
         term = term | l.endswith(ch)
-    wc_ok = (
-        F.size(F.filter(F.split(l, r"\s+"), lambda w: w != F.lit(""))) >=
-        C4_MIN_LINE_WORDS
-    )
+    wc_ok = F.size(ts.words(l)) >= C4_MIN_LINE_WORDS
     clean = F.lit(True)
     for s in C4_BAD_SUBSTRINGS:
         clean = clean & ~F.lower(l).contains(s)
@@ -571,23 +556,6 @@ FW_MAX_SHORT_LINE_FRAC = 0.67
 FW_MAX_DUP_LINE_CHAR_FRAC = 0.10
 
 
-def _fw_lines(ws: Column) -> Column:
-    """Non-overlapping FW_LINE_WORDS-word windows (last may be
-    partial), space-joined — the deterministic stand-in re-lining."""
-    n = F.size(ws)
-    return F.when(
-        n > 0,
-        F.transform(
-            F.sequence(
-                F.lit(1), F.ceil(n / F.lit(float(FW_LINE_WORDS))).cast("int")
-            ),
-            lambda i: F.array_join(
-                F.slice(ws, (i - 1) * FW_LINE_WORDS + 1, FW_LINE_WORDS), " "
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def _fw_dup_chars(ls: Column) -> Column:
     """Characters in duplicated lines — 2nd+ occurrences of an
     identical line, i.e. sum over lines occurring k>=2 times of
@@ -627,12 +595,14 @@ def _fw_ends_punct(l: Column) -> Column:
 
 
 def q_fineweb_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # materialize the window array ONCE: six downstream expressions
-    # reference it, and Catalyst does not CSE an interpreted HOF
-    # across a single projection — the with_rule_stats word_count
-    # trick (measured 3.50 -> 0.95 s on the sf0.1 bench row)
-    d = t(spark, sf_dir, "documents").withColumn(
-        "ls", _fw_lines(ts.words(F.col("text")))
+    # materialize the word and window arrays ONCE: six downstream
+    # expressions reference the windows, and Catalyst does not CSE an
+    # interpreted HOF across a single projection — the with_rule_stats
+    # word_count trick (measured 3.50 -> 0.95 s on the sf0.1 bench row)
+    d = (
+        t(spark, sf_dir, "documents")
+        .withColumn("ws", ts.words(F.col("text")))
+        .withColumn("ls", ts.word_chunks("ws", FW_LINE_WORDS))
     )
     ls = F.col("ls")
     n = F.size(ls)

@@ -43,9 +43,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from curator_spark.functions.textstats import words
 from curator_spark.functions.topk import mark_top_frac, salted_partition_rank
 from curator_spark.queries.common import spread, sql_words, t
-from curator_spark.queries.dedupq import _words
 
 # DSIR: hashed-feature bucket key = first DSIR_HEX chars of md5(word).
 DSIR_HEX = 2                      # 16^2 = 256 buckets
@@ -70,7 +70,7 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def buckets(df: DataFrame) -> DataFrame:
         return df.select(
-            "doc_id", F.explode(_words(F.col("text"))).alias("w")
+            "doc_id", F.explode(words(F.col("text"))).alias("w")
         ).select("doc_id", F.substring(F.md5("w"), 1, DSIR_HEX).alias("b"))
 
     # ONE explode+shuffle over the raw corpus: the per-doc bucket

@@ -315,20 +315,10 @@ def q_doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read; CollapseProject keeps the stages apart because each alias
     # is referenced more than once downstream.
     d = spread(t(spark, sf_dir, "documents"), spark)
-    ws = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != F.lit(""))
-    staged = d.select("doc_id", ws.alias("ws"))
-    n = F.size(F.col("ws"))
-    kg = F.when(
-        n >= WINNOW_K,
-        F.transform(
-            F.sequence(F.lit(1), n - (WINNOW_K - 1)),
-            lambda i: F.concat_ws(
-                " ",
-                *[F.element_at(F.col("ws"), i + j) for j in range(WINNOW_K)],
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    staged = staged.select("doc_id", kg.alias("kg"))
+    staged = d.select("doc_id", ts.words(F.col("text")).alias("ws"))
+    staged = staged.select(
+        "doc_id", ts.word_ngrams("ws", WINNOW_K).alias("kg")
+    )
     staged = staged.select(
         "doc_id",
         F.transform("kg", lambda s: F.md5(s.cast("binary"))).alias("hs"),
@@ -419,10 +409,10 @@ MARKERS = _marker_lexicons()
 def q_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = spread(t(spark, sf_dir, "documents"), spark)
-    ws = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda w: w != F.lit("")
+    d = spread(t(spark, sf_dir, "documents"), spark).withColumn(
+        "ws", ts.words(F.lower(F.col("text")))
     )
+    ws = F.col("ws")
     hits = [
         F.size(
             F.filter(ws, lambda w: w.isin(*MARKERS[lang]))

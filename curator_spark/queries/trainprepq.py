@@ -36,9 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from curator_spark.functions.textstats import word_ngrams, words
 from curator_spark.functions.topk import salted_partition_rank
 from curator_spark.queries.common import spread, sql_words, t
-from curator_spark.queries.dedupq import _words
 
 NGRAM = 5          # decontamination shingle width (words)
 EVAL_MOD = 29      # doc_id % EVAL_MOD == 0 -> held-out eval split
@@ -46,19 +46,8 @@ PACK_BUCKETS = 4   # shard-packing parallelism buckets per language
 PACK_BUDGET = 512  # tokens per training shard
 
 
-def _shingles(ws, n: int):
-    """Distinct word n-gram shingles; empty when fewer than n words."""
-    cnt = F.size(ws)
-    sh = F.transform(
-        F.sequence(F.lit(1), cnt - (n - 1)),
-        lambda i: F.array_join(F.slice(ws, i, n), " "),
-    )
-    return F.when(cnt >= n, F.array_distinct(sh)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-# DuckDB twin of _shingles (1-based list slicing, inclusive ends).
+# DuckDB twin of F.array_distinct(word_ngrams("ws", NGRAM)) (1-based
+# list slicing, inclusive ends).
 SQL_SHINGLES = (
     f"CASE WHEN len(ws) >= {NGRAM} THEN list_distinct(list_transform("
     f"range(1, len(ws) - {NGRAM} + 2), "
@@ -82,9 +71,9 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file local input coalesces to 1 split, so fan out first
     # (no-op at corpus scale — see spread())
     d = spread(d, spark)
-    sh = d.select(
+    sh = d.withColumn("ws", words(F.col("text"))).select(
         "doc_id",
-        F.explode(_shingles(_words(F.col("text")), NGRAM)).alias("s"),
+        F.explode(F.array_distinct(word_ngrams("ws", NGRAM))).alias("s"),
     )
     eval_sh = sh.filter(F.col("doc_id") % EVAL_MOD == 0).select("s").distinct()
     train_sh = sh.filter(F.col("doc_id") % EVAL_MOD != 0)
@@ -117,9 +106,9 @@ def q_decontaminate_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan; AQE broadcasts it outright when the candidate set is small.
     """
     d = spread(t(spark, sf_dir, "documents"), spark)
-    sh = d.select(
+    sh = d.withColumn("ws", words(F.col("text"))).select(
         "doc_id",
-        F.explode(_shingles(_words(F.col("text")), NGRAM)).alias("s"),
+        F.explode(F.array_distinct(word_ngrams("ws", NGRAM))).alias("s"),
     )
     is_eval = F.col("doc_id") % EVAL_MOD == 0
     eval_h = sh.filter(is_eval).select(F.xxhash64("s").alias("h")).distinct()
@@ -183,9 +172,9 @@ FUZZY_THRESHOLD = 0.5  # max-Jaccard flag level: bimodal at sf0.01 — true
 
 def q_decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(t(spark, sf_dir, "documents"), spark)
-    sh = d.select(
+    sh = d.withColumn("ws", words(F.col("text"))).select(
         "doc_id",
-        F.explode(_shingles(_words(F.col("text")), FUZZY_NGRAM)).alias("s"),
+        F.explode(F.array_distinct(word_ngrams("ws", FUZZY_NGRAM))).alias("s"),
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     is_eval = F.col("doc_id") % EVAL_MOD == 0
@@ -352,7 +341,7 @@ def q_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         (F.col("doc_id") % PACK_BUCKETS).alias("bucket"),
-        F.size(_words(F.col("text"))).alias("tok"),
+        F.size(words(F.col("text"))).alias("tok"),
     )
     w = (
         Window.partitionBy("lang", "bucket")

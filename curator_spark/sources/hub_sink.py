@@ -27,6 +27,7 @@ import json
 import math
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 CARD_TEMPLATE = """---
@@ -66,15 +67,27 @@ PARQUET_COMPRESSION_RATIO = 3.0
 FALLBACK_ROWS_PER_SHARD = 500_000
 
 
+def _plan_bytes(plan) -> int:
+    # py4j hands a scala BigInt back as a Python int or a proxy; str()
+    # reads both
+    return int(str(plan.stats().sizeInBytes()))
+
+
 def _estimate_bytes(df: DataFrame) -> int | None:
     """Logical-plan size estimate (parquet footer stats when the source
-    is a file scan); None when the optimizer reports the unknown-size
-    sentinel."""
+    is a file scan), capped at the plan's total input size. None when
+    any input reports the optimizer's unknown-size sentinel: operators
+    above such an input scale the sentinel into a plausible-looking
+    number, and a join estimate multiplies its inputs' sizes."""
     try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        size = int(stats.sizeInBytes().toString())
-        return size if 0 < size < (1 << 62) else None
-    except Exception:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        leaves = plan.collectLeaves()
+        inputs = [_plan_bytes(leaves.apply(i)) for i in range(leaves.size())]
+        if max(inputs) >= (1 << 62):
+            return None
+        size = min(_plan_bytes(plan), sum(inputs))
+        return size if size > 0 else None
+    except Py4JError:
         return None
 
 
@@ -85,9 +98,9 @@ def _estimate_rows(df: DataFrame) -> int | None:
         stats = df._jdf.queryExecution().optimizedPlan().stats()
         rc = stats.rowCount()
         if rc.isDefined():
-            n = int(rc.get().toString())
+            n = int(str(rc.get()))
             return n if n > 0 else None
-    except Exception:
+    except Py4JError:
         pass
     return None
 

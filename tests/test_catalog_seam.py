@@ -255,3 +255,23 @@ def test_sql_literal_quoting():
     assert _sql_literal(False) == "FALSE"
     with pytest.raises(ValueError, match="unsupported"):
         _sql_literal(None)
+
+
+def test_format_conf_read_errors_propagate(tmp_path, monkeypatch):
+    """A session whose JVM is gone falls back to the env/default
+    format; a programming error in the conf read is not swallowed."""
+    from types import SimpleNamespace
+
+    from py4j.protocol import Py4JError
+
+    def session(exc):
+        def get(*_a):
+            raise exc
+
+        return SimpleNamespace(conf=SimpleNamespace(get=get))
+
+    monkeypatch.delenv(FORMAT_ENV, raising=False)
+    tab = open_table(str(tmp_path / "t"), spark=session(Py4JError("gone")))
+    assert isinstance(tab, SnapshotTable)
+    with pytest.raises(AttributeError):
+        open_table(str(tmp_path / "t"), spark=session(AttributeError("bug")))

@@ -18,21 +18,24 @@ from curator_spark.queries.gopherq import (
     C4_MIN_KEPT_LINES,
     _c4_keep_line,
     _rep_chars,
-    _word_ngrams,
 )
 
 
+def _words_row(spark, text: str):
+    """One-row frame holding the word array of `text` as column ws."""
+    return spark.range(1).select(ts.words(F.lit(text)).alias("ws"))
+
+
 def _rep(spark, text: str, n: int) -> tuple[int, int]:
-    ws = ts.words(F.lit(text))
-    row = spark.range(1).select(_rep_chars(ws, n).alias("r")).first()
+    row = _words_row(spark, text).select(_rep_chars("ws", n).alias("r")).first()
     return row.r.top, row.r.dup
 
 
 def test_ngrams_basic(spark):
-    ws = ts.words(F.lit("a b c d"))
-    got = spark.range(1).select(_word_ngrams(ws, 2).alias("g")).first().g
+    df = _words_row(spark, "a b c d")
+    got = df.select(ts.word_ngrams("ws", 2).alias("g")).first().g
     assert got == ["a b", "b c", "c d"]
-    got3 = spark.range(1).select(_word_ngrams(ws, 5).alias("g")).first().g
+    got3 = df.select(ts.word_ngrams("ws", 5).alias("g")).first().g
     assert got3 == []
 
 
@@ -187,8 +190,8 @@ def _fw_row(spark, text: str):
     from curator_spark.queries import gopherq as g
 
     df = spark.createDataFrame([(0, text)], ["doc_id", "text"])
-    ls = g._fw_lines(ts.words(F.col("text")))
-    n = F.size(ls)
+    df = df.withColumn("ws", ts.words(F.col("text")))
+    ls = ts.word_chunks("ws", g.FW_LINE_WORDS)
     return df.select(
         ls.alias("ls"),
         g._fw_dup_chars(ls).alias("dup"),
@@ -201,6 +204,14 @@ def test_fineweb_relining_windows(spark):
     words = [f"w{i}" for i in range(12)]
     row = _fw_row(spark, " ".join(words))
     assert row.ls == [" ".join(words[:10]), " ".join(words[10:])]
+    # word_chunks at the boilerplate segment size too: 11 words in
+    # 4-word windows -> 4, 4, 3; 12 words in 10-word windows -> 10, 2
+    for size, ws in ((4, words[:11]), (10, words)):
+        got = _words_row(spark, " ".join(ws)).select(
+            ts.word_chunks("ws", size).alias("c")
+        ).first().c
+        assert got == [" ".join(ws[i:i + size]) for i in range(0, len(ws), size)]
+        assert 0 < len(got[-1].split()) < size
 
 
 def test_fineweb_dup_chars_hand_computed(spark):

@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from curator_spark.sources.hub_sink import push_to_hub_layout
 from curator_spark.sources.viewer_sink import ViewerSession
 
@@ -60,14 +62,21 @@ def test_hub_shard_count_compression_aware(spark, tmp_path):
 
     df = spark.range(1000).selectExpr("id", "id * 2 AS v")
     est = hs._estimate_bytes(df)
-    if est:  # range() exposes a size estimate in Spark 4
-        import math
+    assert est  # range() exposes a size estimate in Spark 4
+    import math
 
-        target = max(1, est // 6)  # force a multi-shard plan
-        man = hs.push_to_hub_layout(df, str(tmp_path / "r1"), "u/d",
-                                    target_shard_bytes=target)
-        expect = max(1, math.ceil(est / hs.PARQUET_COMPRESSION_RATIO / target))
-        assert man["n_shards"] == expect
+    target = max(1, est // 6)  # force a multi-shard plan
+    man = hs.push_to_hub_layout(df, str(tmp_path / "r1"), "u/d",
+                                target_shard_bytes=target)
+    expect = max(1, math.ceil(est / hs.PARQUET_COMPRESSION_RATIO / target))
+    assert man["n_shards"] == expect
+    # no estimate over an input without size statistics (the optimizer
+    # would report a scaled sentinel), and a join's estimate is capped
+    # at its inputs' total size instead of their product
+    local = spark.createDataFrame([(1, "a")], "id long, s string")
+    assert hs._estimate_bytes(local.select("id")) is None
+    joined = df.join(df.withColumnRenamed("v", "w"), "id")
+    assert hs._estimate_bytes(joined) <= 2 * est
 
 
 def test_hub_fallback_row_floor(spark, tmp_path, monkeypatch):
@@ -81,6 +90,16 @@ def test_hub_fallback_row_floor(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(hs, "FALLBACK_ROWS_PER_SHARD", 500_000)
     man = hs.push_to_hub_layout(df, str(tmp_path / "r2"), "u/d")
     assert man["n_shards"] == 4  # ceil(1.6M / 500k), not 1
+
+
+def test_size_estimate_errors_propagate():
+    """Only a py4j failure means "no estimate"; a programming error in
+    the estimators is not swallowed."""
+    from curator_spark.sources.hub_sink import _estimate_bytes, _estimate_rows
+
+    for estimate in (_estimate_bytes, _estimate_rows):
+        with pytest.raises(AttributeError):
+            estimate(object())  # no _jdf
 
 
 def test_viewer_failed_attempt_cleans_tmp_spool(spark, tmp_path):

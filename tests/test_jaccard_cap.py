@@ -10,13 +10,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from curator_spark.functions.textstats import word_ngrams, words
 from curator_spark.oracle.compare import compare_query
-from curator_spark.queries.dedupq import (
-    JACCARD_MAX_DF,
-    _shingles2,
-    _words,
-    q_dedup_jaccard_pairs,
-)
+from curator_spark.queries.dedupq import JACCARD_MAX_DF, q_dedup_jaccard_pairs
 
 
 @pytest.fixture(scope="module")
@@ -54,8 +50,8 @@ def sf_dir(spark, tmp_path_factory) -> str:
 
 def test_hot_shingle_never_exceeds_cap(spark, sf_dir):
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sh = d.select(
-        "doc_id", F.explode(_shingles2(_words(F.col("text")))).alias("sh")
+    sh = d.select("doc_id", words(F.col("text")).alias("ws")).select(
+        "doc_id", F.explode(F.array_distinct(word_ngrams("ws", 2))).alias("sh")
     )
     dfc = sh.groupBy("sh").count()
     # fixture really is pathological: the hot shingle covers 50% of docs

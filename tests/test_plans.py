@@ -14,6 +14,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from curator_spark.queries import ALL_QUERIES
+
 
 def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -82,17 +84,14 @@ def test_udf_stages_are_arrow_batched(spark, pages, cfg):
     assert "BatchEvalPython" not in plan
 
 
-def _expression_classes(df) -> set[str]:
-    """Simple class names of every node and expression in the
-    optimized logical plan."""
+def _walk_plan(df, visit) -> None:
+    """Call `visit` on every dict and list of the optimized logical
+    plan's JSON, depth first."""
     import json
 
-    found: set[str] = set()
-
     def walk(x) -> None:
+        visit(x)
         if isinstance(x, dict):
-            if isinstance(x.get("class"), str):
-                found.add(x["class"].rsplit(".", 1)[-1])
             for v in x.values():
                 walk(v)
         elif isinstance(x, list):
@@ -100,7 +99,113 @@ def _expression_classes(df) -> set[str]:
                 walk(v)
 
     walk(json.loads(df._jdf.queryExecution().optimizedPlan().toJSON()))
+
+
+def _short(node: dict) -> str:
+    return node["class"].rsplit(".", 1)[-1]
+
+
+def _expression_classes(df) -> set[str]:
+    """Simple class names of every node and expression in the
+    optimized logical plan."""
+    found: set[str] = set()
+
+    def visit(x) -> None:
+        if isinstance(x, dict) and isinstance(x.get("class"), str):
+            found.add(_short(x))
+
+    _walk_plan(df, visit)
     return found
+
+
+def _tree(nodes: list, i: int = 0) -> tuple[tuple, int]:
+    """Rebuild the (class, children) tree serialized in pre-order at
+    nodes[i]; also return the index just past it."""
+    kids, j = [], i + 1
+    for _ in range(nodes[i]["num-children"]):
+        kid, j = _tree(nodes, j)
+        kids.append(kid)
+    return (_short(nodes[i]), kids), j
+
+
+def _subtrees(tree: tuple):
+    yield tree
+    for kid in tree[1]:
+        yield from _subtrees(kid)
+
+
+def _tokenizes(cls: str) -> bool:
+    return cls == "StringSplit" or cls.startswith("RegExp")
+
+
+def _lambda_resplits(df) -> list[str]:
+    """Tokenizing subtrees (StringSplit / RegExp*) inside a
+    higher-order function's lambda body that hold no lambda variable.
+    Spark evaluates such a captured expression once per array element,
+    so a split of the page inside a per-word lambda costs O(words²) per
+    row; the word array must be projected as a column first
+    (functions/textstats.word_ngrams / word_chunks)."""
+    bad: list[str] = []
+
+    def visit(x) -> None:
+        if not (
+            isinstance(x, list) and x and isinstance(x[0], dict)
+            and "num-children" in x[0]
+        ):
+            return
+        for lam in _subtrees(_tree(x)[0]):
+            if lam[0] != "LambdaFunction":
+                continue
+            for sub in _subtrees(lam[1][0]):  # the lambda body
+                classes = {c for c, _ in _subtrees(sub)}
+                if _tokenizes(sub[0]) and "NamedLambdaVariable" not in classes:
+                    bad.append(sub[0])
+
+    _walk_plan(df, visit)
+    return bad
+
+
+def test_lambda_resplit_lint_trips_on_inline_split(spark):
+    """Self-test of the lint: a page split captured inside a per-element
+    lambda is flagged; the same split projected once is not."""
+    from curator_spark.functions.textstats import words
+
+    df = spark.createDataFrame([("a b c",)], "text string")
+    seq = F.sequence(F.lit(1), F.lit(3))
+    inline = df.select(
+        F.transform(seq, lambda i: F.element_at(words(F.col("text")), i))
+    )
+    assert _lambda_resplits(inline) == ["StringSplit"]
+    projected = df.withColumn("ws", words(F.col("text"))).select(
+        F.transform(seq, lambda i: F.element_at(F.col("ws"), i)),
+        F.transform(seq, lambda i: F.size(F.col("ws")) + i),
+    )
+    assert _lambda_resplits(projected) == []
+
+
+@pytest.mark.parametrize("name", sorted(ALL_QUERIES))
+def test_no_query_resplits_inside_a_lambda(spark, name):
+    from test_queries_oracle import SF_DIR
+
+    assert _lambda_resplits(ALL_QUERIES[name](spark, SF_DIR)) == []
+
+
+def test_near_dup_index_plans_do_not_resplit_inside_a_lambda(spark, tmp_path):
+    """The NearDupIndex key derivation and confirm step tokenize each
+    page once (the same lint as the registry queries)."""
+    from curator_spark.pipeline.dedup_index import NearDupIndex
+
+    idx = NearDupIndex(str(tmp_path / "idx"), n_buckets=4)
+    pages = spark.createDataFrame(
+        [("u1", "a b c d"), ("u2", "a b c e")], "url string, text string"
+    )
+    marked = pages.select(
+        "url", "text",
+        F.lit(True).alias("near_dup_candidate"),
+        F.lit("u1").alias("near_dup_canonical"),
+    )
+    assert _lambda_resplits(idx._exploded_keys(pages)) == []
+    assert _lambda_resplits(idx.confirm_candidates(spark, marked, pages)) == []
 
 
 def test_quality_plan_scores_in_one_arrow_node(spark, pages, cfg):

@@ -60,8 +60,8 @@ def test_measured_window_pinned():
     accidental registry edit (reorder, swap, insertion above the cap)
     cannot silently change what the correctness gate measures. The
     one deliberate change vs CORRECTNESS_r04.json is the r5 swap:
-    decontaminate_hashed in, error_props_histogram demoted to EXTRA
-    (VERDICT r4 ask #6)."""
+    decontaminate_hashed in, error_props_histogram out of the window
+    (VERDICT r4 ask #6; the query has since been deleted)."""
     from curator_spark.queries import MEASURED, QUERIES
 
     expected = ["quality_full_docs",

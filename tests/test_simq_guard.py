@@ -77,3 +77,14 @@ def test_neardup_route_decision_needs_no_count_scan(spark, monkeypatch):
     df = simq.q_embedding_neardup(spark, SF_DIR)  # must not raise
     assert simq.LAST_NEARDUP_ROUTE == "exact"
     assert df.columns == ["vec_a", "vec_b", "sim"]
+
+
+def test_parquet_row_count_errors_propagate(spark):
+    """Footer counting answers None only for I/O, Arrow and py4j
+    failures; a programming error reaches the caller."""
+    from curator_spark.queries.common import parquet_row_count
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    assert parquet_row_count(docs) == docs.count()
+    with pytest.raises(AttributeError):
+        parquet_row_count(object())  # no inputFiles()

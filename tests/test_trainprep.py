@@ -19,6 +19,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from curator_spark.functions.textstats import word_ngrams
 from curator_spark.queries import trainprepq as tp
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
@@ -37,12 +38,10 @@ def test_decontaminate_flag_semantics(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     sh = docs.select(
         "doc_id",
-        F.explode(
-            tp._shingles(
-                F.filter(F.split("text", r"\s+"), lambda w: w != F.lit("")),
-                tp.NGRAM,
-            )
-        ).alias("s"),
+        F.filter(F.split("text", r"\s+"), lambda w: w != F.lit("")).alias("ws"),
+    ).select(
+        "doc_id",
+        F.explode(F.array_distinct(word_ngrams("ws", tp.NGRAM))).alias("s"),
     ).toPandas()
     eval_set = set(sh[sh.doc_id % tp.EVAL_MOD == 0].s)
     expect = {
