@@ -43,6 +43,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -257,7 +258,7 @@ def release_probe_cache() -> None:
     while _LIVE_CACHE:
         try:
             _LIVE_CACHE.pop().unpersist()
-        except Exception:
+        except Py4JError:
             pass  # prior entry's session may already be stopped
 
 

@@ -41,6 +41,7 @@ from typing import Any
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
+from curator_spark.pipeline import fsutil
 from curator_spark.pipeline.snapshot import SnapshotTable
 
 FORMAT_CONF = "spark.curator.table.format"   # "local" (default) | "iceberg"
@@ -219,11 +220,11 @@ class IcebergTable(CuratedTable):
         # (unlike the local store, which consumes its stage dir by
         # renaming it into the table) — drop the stage dir so shared
         # storage doesn't accumulate one orphan dir per run. Best
-        # effort: the commit above is already durable.
+        # effort: the commit above is already durable, so a storage
+        # error from the JVM filesystem is dropped.
         try:
-            from curator_spark.pipeline import fsutil
             fsutil.delete(self.spark, data_path)
-        except Exception:
+        except Py4JError:
             pass
         return sid
 

@@ -275,3 +275,37 @@ def test_format_conf_read_errors_propagate(tmp_path, monkeypatch):
     assert isinstance(tab, SnapshotTable)
     with pytest.raises(AttributeError):
         open_table(str(tmp_path / "t"), spark=session(AttributeError("bug")))
+
+
+def test_iceberg_stage_cleanup_swallows_only_storage_errors(monkeypatch):
+    """The stage-dir delete after a durable append is best effort: a JVM
+    filesystem error is dropped and the new snapshot id returned, while
+    a programming error in the cleanup propagates."""
+    from types import SimpleNamespace
+
+    from py4j.protocol import Py4JError
+
+    from curator_spark.pipeline import fsutil
+
+    class _Writer:
+        def option(self, *_a):
+            return self
+
+        def append(self):
+            pass
+
+    frame = SimpleNamespace(writeTo=lambda _ident: _Writer())
+    t = _FakeIceberg([_commit(5, None, "append")])
+    t.spark = SimpleNamespace(read=SimpleNamespace(parquet=lambda _p: frame))
+
+    def delete_raising(exc):
+        def delete(_spark, _path):
+            raise exc
+
+        return delete
+
+    monkeypatch.setattr(fsutil, "delete", delete_raising(Py4JError("fs gone")))
+    assert t.commit("s3a://bucket/stage", {"bucket": 1}) == 5
+    monkeypatch.setattr(fsutil, "delete", delete_raising(AttributeError("bug")))
+    with pytest.raises(AttributeError):
+        t.commit("s3a://bucket/stage", {"bucket": 1})

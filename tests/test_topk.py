@@ -136,6 +136,30 @@ def test_returned_frame_reads_probe_cache(spark):
     assert len(_LIVE_CACHE) == 1
 
 
+class _Cached:
+    def __init__(self, exc=None):
+        self.exc = exc
+
+    def unpersist(self):
+        if self.exc is not None:
+            raise self.exc
+
+
+def test_release_probe_cache_swallows_only_py4j_errors(monkeypatch):
+    # an entry whose session is stopped raises a Py4JError on unpersist:
+    # it is dropped and the rest of the cache is still released
+    from py4j.protocol import Py4JError
+
+    cache = [_Cached(), _Cached(Py4JError("session stopped")), _Cached()]
+    monkeypatch.setattr(topk, "_LIVE_CACHE", cache)
+    topk.release_probe_cache()
+    assert cache == []
+    # a programming error is not swallowed
+    monkeypatch.setattr(topk, "_LIVE_CACHE", [_Cached(AttributeError("bug"))])
+    with pytest.raises(AttributeError):
+        topk.release_probe_cache()
+
+
 def test_dsir_plan_has_no_unpartitioned_window(spark):
     from curator_spark.queries.mixq import q_dsir_importance
 
